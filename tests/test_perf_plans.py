@@ -162,3 +162,39 @@ def test_comp_map_joins_back_broadcast(spark, sf_dir):
     # and the labeling itself is unchanged by the hint
     got = {r["doc_id"]: r["comp"] for r in comp.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def _stats_pass2_plan(spark, monkeypatch, n_numeric: int) -> str:
+    """Physical plan of stats pass 2 over a segment with n_numeric double
+    columns, a >16-distinct string column (bloom), a ≤16-distinct one
+    (value counts) and a vector column."""
+    from vecgo_spark.plans import pruning
+
+    cols = ", ".join(f"x{j} double" for j in range(n_numeric))
+    df = spark.createDataFrame(
+        [tuple(float(i * (j + 1)) for j in range(n_numeric))
+         + (f"tag-{i}", f"c{i % 3}", [float(i), 1.0, -1.0]) for i in range(40)],
+        f"{cols}, tag string, cat string, vector array<double>")
+    frames = []
+    build = pruning._pass2_frame
+    monkeypatch.setattr(pruning, "_pass2_frame",
+                        lambda *a, **k: frames.append(build(*a, **k)) or frames[-1])
+    stats = pruning.collect_segment_stats(df, vector_col="vector", dim=3)
+    assert "bloom" in stats["tag"] and "value_counts" in stats["cat"]
+    assert all("log_histogram" in stats[f"x{j}"] for j in range(n_numeric))
+    (frame,) = frames
+    return frame._jdf.queryExecution().executedPlan().toString()
+
+
+def test_stats_pass2_is_one_narrow_aggregate(spark, monkeypatch):
+    """Segment stats pass 2 is one grouped aggregate over exploded
+    (kind, column, bin) entries: no Expand (a countDistinct), no
+    BroadcastNestedLoopJoin (a params cross join), and an aggregate list
+    that does not grow with the number of columns — the old wide row held
+    ~40 aggregates per numeric column."""
+    plans = {n: _stats_pass2_plan(spark, monkeypatch, n) for n in (2, 6)}
+    for plan in plans.values():
+        assert "Expand" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+    n_aggs = {n: len(re.findall(r"partial_\w+\(", p)) for n, p in plans.items()}
+    assert 0 < n_aggs[2] == n_aggs[6], n_aggs

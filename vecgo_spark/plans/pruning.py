@@ -20,10 +20,10 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, NumericType, StringType
+from pyspark.sql.types import BooleanType, IntegralType, NumericType, StringType
 
 from vecgo_spark.filters import Filter, FilterSet
-from vecgo_spark.functions.hashing import stable_hash64, stable_hash64_py
+from vecgo_spark.functions.hashing import stable_hash64_expr_sql, stable_hash64_py
 from vecgo_spark.plans.manifest import SegmentMeta
 
 # Bloom sizing (≙ internal/manifest/bloom.go): 2048 bits / 4 hashes gives
@@ -127,9 +127,8 @@ def _pass1_finalize(
 def collect_segment_stats(
     df: DataFrame, exclude: tuple[str, ...] = (),
     vector_col: str | None = None, dim: int | None = None,
-    ndv_col: str | None = None,
 ) -> dict[str, Any]:
-    """ALL per-segment commit-time stats in exactly TWO agg jobs
+    """ALL per-segment commit-time stats in two aggregates
     (≙ StatsCollector.Add/Finalize, stats_collector.go:110-615):
 
       pass 1  per scalar column: min / max / null_count / ≤16-value set
@@ -137,16 +136,16 @@ def collect_segment_stats(
               per-dim sums + count (→ centroid).
       pass 2  everything that depends on pass-1 results: 8-bin linear
               histogram + 16-bin LOG histogram with per-bin min/max
-              (stats_collector.go:446-529), Bloom position sets for
-              >16-distinct strings (bloom.go; bounded collect_sets),
-              vector radius / mean / max norm against the centroid, and
-              an EXACT distinct count for ndv_col (the id column — the
-              upsert-freshness proof needs distinctness, which min/max/
-              count alone cannot establish).
+              (stats_collector.go:446-529), Bloom positions for
+              >16-distinct strings (bloom.go), exact value counts for
+              ≤16-distinct strings, and vector radius / mean / max norm
+              against the centroid — one narrow grouped aggregate.
 
-    Segment builds fuse pass 1 INTO the write job via observe_segment_stats
-    (no extra scan), so a 100 TB ingest pays write + ONE stats pass —
-    matching the reference's single-pass collector + finalize."""
+    No id ndv here: segment writes count it in the PK sidecar write
+    (VectorTable._segment_pk). Segment builds fuse pass 1 INTO the write
+    job via observe_segment_stats (no extra scan), so an ingest pays
+    write + ONE stats pass — matching the reference's single-pass
+    collector + finalize."""
     cols, string_cols, numeric_cols, do_vec = _pass1_spec(
         df.schema, exclude, vector_col, dim)
     if not cols and not do_vec:
@@ -155,13 +154,12 @@ def collect_segment_stats(
                               do_vec, vector_col, dim)).first()
     out, centroid = _pass1_finalize(row, cols, string_cols, numeric_cols, do_vec, dim)
     return _pass2_apply(df, out, centroid, cols, string_cols, numeric_cols,
-                        vector_col, ndv_col)
+                        vector_col)
 
 
 def observe_segment_stats(
     df: DataFrame, exclude: tuple[str, ...] = (),
     vector_col: str | None = None, dim: int | None = None,
-    ndv_col: str | None = None,
 ):
     """Fuse pass 1 into the caller's next ACTION on df (a segment write):
     returns (df_with_observation, finalize) where finalize(written_df)
@@ -169,8 +167,8 @@ def observe_segment_stats(
     zero extra scans — and runs only pass 2 over the written files.
     The reference collects stats streaming inside the segment writer
     (stats_collector.go:110-445); this is the Spark-native equivalent.
-    countDistinct is not a legal observed metric, so the ndv_col count
-    lives in pass 2."""
+    Like collect_segment_stats, no id ndv: the segment's PK sidecar
+    write supplies it."""
     from pyspark.sql import Observation
 
     cols, string_cols, numeric_cols, do_vec = _pass1_spec(
@@ -186,133 +184,132 @@ def observe_segment_stats(
         out, centroid = _pass1_finalize(
             row, cols, string_cols, numeric_cols, do_vec, dim)
         return _pass2_apply(written, out, centroid, cols, string_cols,
-                            numeric_cols, vector_col, ndv_col)
+                            numeric_cols, vector_col)
 
     return df, finalize
+
+
+HIST_BINS = 8
+# pass-2 entry kinds: each row emits one (k, c, b, i, d) struct per stat
+_K_HIST, _K_LOG, _K_BLOOM, _K_VALUE, _K_VEC = range(5)
+
+
+def _sql_double(v: float) -> str:
+    return f"({v!r}D)" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+
+
+def _sql_col(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
+
+
+def _pass2_frame(
+    df: DataFrame, out: dict[str, Any], centroid: list[float] | None,
+    cols: list[str], hist_cols: list[str], bloom_cols: list[str],
+    value_cols: list[str], vector_col: str | None,
+) -> DataFrame | None:
+    """Pass 2 as ONE long-format aggregate: every row emits
+    (kind, column index, bin, integral value, floating value) structs,
+    exploded and grouped by (kind, column, bin). The aggregate list is
+    fixed however many columns the segment has; bin bounds and the
+    centroid are plan literals. A NULL input lands in bin NULL. The
+    entries are SQL text: as Columns they cost ~3k py4j round trips
+    (~0.4 s of driver time per segment at dim 64)."""
+    integral = {f.name for f in df.schema.fields
+                if isinstance(f.dataType, IntegralType)}
+
+    def entry(kind: int, c: str | None, b: str, i="NULL", d="NULL") -> str:
+        return (f"named_struct('k', {kind}, 'c', {-1 if c is None else cols.index(c)}, "
+                f"'b', CAST({b} AS INT), 'i', CAST({i} AS BIGINT), "
+                f"'d', CAST({d} AS DOUBLE))")
+
+    def bin_of(x: str, pos: str, n: int) -> str:  # greatest() skips NULLs
+        return (f"CASE WHEN {x} IS NOT NULL THEN least({n - 1}, greatest(0, "
+                f"CAST(floor(({pos}) * {n}) AS INT))) END")
+
+    entries = []
+    for c in hist_cols:
+        q = _sql_col(c)
+        x = f"CAST({q} AS DOUBLE)"
+        lo, hi = float(out[c]["min"]), float(out[c]["max"])
+        entries.append(entry(_K_HIST, c, bin_of(
+            x, f"({x} - {_sql_double(lo)}) / {_sql_double(hi - lo)}", HIST_BINS)))
+        tlo, thi = _log_t_py(lo), _log_t_py(hi)
+        t = f"signum({x}) * log1p(abs({x}))"
+        lidx = bin_of(x, f"({t} - {_sql_double(tlo)}) / {_sql_double((thi - tlo) or 1.0)}",
+                      LOG_BINS)
+        # per-bin min/max keep the column's own type: an integral column
+        # rides the long field, so ids past 2**53 stay exact
+        entries.append(entry(_K_LOG, c, lidx, **{"i" if c in integral else "d": q}))
+    for c in bloom_cols:
+        entries += [entry(_K_BLOOM, c, f"pmod({stable_hash64_expr_sql(_sql_col(c), s)}, {BLOOM_M})")
+                    for s in range(BLOOM_K)]
+    # exact per-value frequencies for low-cardinality strings (the values
+    # are known from pass 1): turns categorical-eq selectivity estimates
+    # from the uniform 1/|values| guess into the exact match fraction —
+    # the filtered ANN strategy cutover (graph_at_rest.py) depends on it
+    for c in value_cols:
+        vals = ", ".join("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+                         for v in out[c]["values"])
+        entries.append(entry(_K_VALUE, c, f"array_position(array({vals}), {_sql_col(c)}) - 1"))
+    if centroid is not None:
+        v = f"CAST({_sql_col(vector_col)} AS ARRAY<DOUBLE>)"
+        cent = "array(" + ", ".join(_sql_double(float(x)) for x in centroid) + ")"
+        d2 = (f"aggregate(zip_with({v}, {cent}, (x, y) -> (x - y) * (x - y)), "
+              "0.0D, (acc, x) -> acc + x)")
+        nrm = f"sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x))"
+        entries += [entry(_K_VEC, None, "0", d=f"sqrt({d2})"),
+                    entry(_K_VEC, None, "1", d=nrm)]
+    if not entries:
+        return None
+    return (df.selectExpr(f"inline(array({', '.join(entries)}))").groupBy("k", "c", "b")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.min("i").alias("imin"), F.max("i").alias("imax"),
+                 F.min("d").alias("dmin"), F.max("d").alias("dmax"),
+                 F.avg("d").alias("davg")))
 
 
 def _pass2_apply(
     df: DataFrame, out: dict[str, Any], centroid: list[float] | None,
     cols: list[str], string_cols: list[str], numeric_cols: list[str],
-    vector_col: str | None, ndv_col: str | None = None,
+    vector_col: str | None,
 ) -> dict[str, Any]:
-    # ---- pass 2 (only when something depends on pass-1 results)
-    #
-    # Data-dependent values (bin bounds, the centroid) ride a broadcast
-    # ONE-ROW params DataFrame instead of being baked in as literals: a
-    # literal-bearing plan generates fresh codegen source per segment
-    # (every build paid a ~2s whole-stage compile); with params as column
-    # references the plan is structurally identical across segments of
-    # the same schema and the codegen cache hits. Arithmetic is unchanged
-    # — the same python-computed doubles flow in, as columns.
-    hist_cols = [
-        c for c in cols
-        if c in numeric_cols
-        and out[c]["min"] is not None
-        and out[c]["max"] is not None
-        and float(out[c]["max"]) > float(out[c]["min"])
-    ]
+    """Run pass 2 (when something depends on pass-1 results) into `out`."""
+    hist_cols = [c for c in numeric_cols if out[c]["min"] is not None
+                 and float(out[c]["max"]) > float(out[c]["min"])]
     bloom_cols = [c for c in string_cols if "values" not in out[c]]
-    bins = 8
-    params_fields: list[str] = []
-    params_values: list[Any] = []
-
-    def pcol(name: str, value: Any, ddl: str = "double") -> F.Column:
-        params_fields.append(f"`{name}` {ddl}")
-        params_values.append(value)
-        return F.col(name)
-
-    aggs2 = []
-    for c in hist_cols:
-        lo, hi = float(out[c]["min"]), float(out[c]["max"])
-        loc = pcol(f"__p_{c}_lo", lo)
-        spanc = pcol(f"__p_{c}_span", hi - lo)
-        pos = (F.col(c).cast("double") - loc) / spanc
-        idx = F.least(F.lit(bins - 1), F.greatest(F.lit(0), F.floor(pos * bins).cast("int")))
-        for b in range(bins):
-            aggs2.append(
-                F.sum(F.when(F.col(c).isNotNull() & (idx == b), 1).otherwise(0))
-                .alias(f"{c}__h{b}")
-            )
-        tlo, thi = _log_t_py(lo), _log_t_py(hi)
-        tloc = pcol(f"__p_{c}_tlo", tlo)
-        tspanc = pcol(f"__p_{c}_tspan", (thi - tlo) or 1.0)
-        t = F.signum(F.col(c).cast("double")) * F.log1p(F.abs(F.col(c).cast("double")))
-        lidx = F.least(F.lit(LOG_BINS - 1), F.greatest(
-            F.lit(0), F.floor((t - tloc) / tspanc * LOG_BINS).cast("int")))
-        for b in range(LOG_BINS):
-            inb = F.col(c).isNotNull() & (lidx == b)
-            aggs2 += [
-                F.sum(F.when(inb, 1).otherwise(0)).alias(f"{c}__ln{b}"),
-                F.min(F.when(inb, F.col(c))).alias(f"{c}__lmin{b}"),
-                F.max(F.when(inb, F.col(c))).alias(f"{c}__lmax{b}"),
-            ]
-    for c in bloom_cols:
-        for s in range(BLOOM_K):
-            aggs2.append(
-                F.collect_set(
-                    F.pmod(stable_hash64(F.col(c), seed=s), F.lit(BLOOM_M))
-                ).alias(f"{c}__b{s}")
-            )
-    # exact per-value frequencies for low-cardinality strings (the values
-    # are known from pass 1): turns categorical-eq selectivity estimates
-    # from the uniform 1/|values| guess into the exact match fraction —
-    # the filtered ANN strategy cutover (graph_at_rest.py) depends on it.
-    # Values ride params columns like the other data-dependent inputs.
-    valcount_cols = [c for c in string_cols if out[c].get("values")]
-    for c in valcount_cols:
-        for i, v in enumerate(out[c]["values"]):
-            vc = pcol(f"__p_{c}_v{i}", v, "string")
-            aggs2.append(
-                F.sum(F.when(F.col(c) == vc, 1).otherwise(0)).alias(f"{c}__vc{i}"))
-    if centroid is not None:
-        v = F.col(vector_col).cast("array<double>")
-        cent = pcol("__p_cent", [float(x) for x in centroid], "array<double>")
-        d2 = F.aggregate(
-            F.zip_with(v, cent, lambda x, y: (x - y) * (x - y)), F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        nrm = F.sqrt(F.aggregate(
-            F.zip_with(v, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        ))
-        aggs2 += [
-            F.max(F.sqrt(d2)).alias("__vradius"),
-            F.avg(nrm).alias("__vmean_norm"),
-            F.max(nrm).alias("__vmax_norm"),
-        ]
-    do_ndv = ndv_col is not None and ndv_col in out and out["__rows"] > 1
-    if do_ndv:
-        aggs2.append(F.countDistinct(ndv_col).alias("__ndv"))
-    if not aggs2:
+    value_cols = [c for c in string_cols if out[c].get("values")]
+    frame = _pass2_frame(df, out, centroid, cols, hist_cols, bloom_cols,
+                         value_cols, vector_col)
+    if frame is None:
         return out
-    if params_values:
-        pdf = df.sparkSession.createDataFrame(
-            [tuple(params_values)], ", ".join(params_fields))
-        df = df.crossJoin(F.broadcast(pdf))
-    row2 = df.agg(*aggs2).first()
-    if do_ndv:
-        out[ndv_col]["ndv"] = int(row2["__ndv"] or 0)
-
     for c in hist_cols:
-        out[c]["histogram"] = [int(row2[f"{c}__h{b}"] or 0) for b in range(bins)]
+        out[c]["histogram"] = [0] * HIST_BINS
         out[c]["log_histogram"] = {
             "lo": float(out[c]["min"]), "hi": float(out[c]["max"]),
-            "bins": [
-                {"n": int(row2[f"{c}__ln{b}"] or 0),
-                 "min": row2[f"{c}__lmin{b}"], "max": row2[f"{c}__lmax{b}"]}
-                for b in range(LOG_BINS)
-            ],
+            "bins": [{"n": 0, "min": None, "max": None} for _ in range(LOG_BINS)],
         }
-    for c in valcount_cols:
-        out[c]["value_counts"] = {
-            v: int(row2[f"{c}__vc{i}"] or 0)
-            for i, v in enumerate(out[c]["values"])
-        }
-    for c in bloom_cols:
-        bits = bytearray(BLOOM_M // 8)
-        for s in range(BLOOM_K):
-            for p in row2[f"{c}__b{s}"] or []:
-                bits[p >> 3] |= 1 << (p & 7)
+    for c in value_cols:
+        out[c]["value_counts"] = dict.fromkeys(out[c]["values"], 0)
+    blooms = {c: bytearray(BLOOM_M // 8) for c in bloom_cols}
+    vec = [None, None]
+    for r in frame.collect():
+        kind, c, b = r["k"], cols[r["c"]] if r["c"] >= 0 else None, r["b"]
+        if b is None:
+            continue  # the column's NULL inputs
+        if kind == _K_HIST:
+            out[c]["histogram"][b] = r["n"]
+        elif kind == _K_LOG:
+            ival = r["imin"] is not None
+            out[c]["log_histogram"]["bins"][b] = {
+                "n": r["n"], "min": r["imin"] if ival else r["dmin"],
+                "max": r["imax"] if ival else r["dmax"]}
+        elif kind == _K_BLOOM:
+            blooms[c][b >> 3] |= 1 << (b & 7)
+        elif kind == _K_VALUE:
+            out[c]["value_counts"][out[c]["values"][b]] = r["n"]
+        else:
+            vec[b] = r
+    for c, bits in blooms.items():
         out[c]["bloom"] = {
             "m": BLOOM_M, "k": BLOOM_K,
             "bits": base64.b64encode(bytes(bits)).decode(),
@@ -320,9 +317,9 @@ def _pass2_apply(
     if centroid is not None:
         out[vector_col] = {
             "centroid": centroid,
-            "radius": float(row2["__vradius"]),
-            "mean_norm": float(row2["__vmean_norm"]),
-            "max_norm": float(row2["__vmax_norm"]),
+            "radius": float(vec[0]["dmax"]),
+            "mean_norm": float(vec[1]["davg"]),
+            "max_norm": float(vec[1]["dmax"]),
         }
     return out
 

@@ -327,8 +327,9 @@ class VectorTable:
         rel = os.path.join(SEG_DIR, name)
         full = os.path.join(self.path, rel)
         # pass-1 stats ride the write job itself (Observation — no extra
-        # scan of the new segment); only histogram/bloom/radius pass 2
-        # re-reads the written files
+        # scan of the new segment); only the histogram/bloom/radius pass 2
+        # re-reads the written files, and the exact id ndv rides the PK
+        # sidecar write
         df, stats_fin = self._observe_stats(df)
         try:
             df.write.mode("error").parquet(full)
@@ -343,11 +344,8 @@ class VectorTable:
             # commit concrete-type pins only now that the segment holding
             # those types exists on disk — a failed write leaves no trace
             self.manifest.meta.setdefault("schema_concrete", {}).update(new_pins)
-        written = self.spark.read.parquet(full)
-        stats = stats_fin(written)
-        rows = stats.pop("__rows", None)
-        if rows is None:
-            rows = written.count()
+        written, stats, rows = self._segment_written(full, df, stats_fin)
+        pk_rel = self._segment_pk(written, name, stats, rows)
         if not assign_ids:
             s_id = stats.get(self.id_col) or {}
             if rows > 1 and s_id.get("ndv", rows) != rows:
@@ -378,11 +376,10 @@ class VectorTable:
                 # during this write — drop them only after it lands
                 deduped.write.mode("error").parquet(full)
                 fs_rmtree(old_full)
-                written = self.spark.read.parquet(full)
-                stats = stats_fin(written)
-                rows = stats.pop("__rows", None)
-                if rows is None:
-                    rows = written.count()
+                fs_rmtree(os.path.join(self.path, pk_rel))
+                written, stats, rows = self._segment_written(
+                    full, deduped, stats_fin)
+                pk_rel = self._segment_pk(written, name, stats, rows)
                 s_id = stats.get(self.id_col) or {}
             if not self._ids_provably_fresh(stats, rows):
                 # explicit ids may collide with existing rows → upsert
@@ -402,36 +399,67 @@ class VectorTable:
             if s.get("max") is not None:
                 self.manifest.next_id = max(self.manifest.next_id, int(s["max"]) + 1)
         size = fs_du(full)
-        pk_rel = self._write_pk_sidecar(written, name) if rows else None
         self._pending.append(SegmentMeta(path=rel, rows=rows, lsn=lsn, bytes=size,
                                          stats=stats, pk=pk_rel))
         return rows, size
 
-    def _write_pk_sidecar(self, written: DataFrame, name: str,
-                          mode: str = "error") -> str:
-        """Persist the PK sidecar for a just-written segment: the narrow
-        (id, _lsn) projection, the reference's persisted PK index
-        (engine.go:2226-2262 persistPKIndex; consulted per read at
-        search.go:1092-1105 via internal/pk/mvcc.go:125). Map-only — no
-        distinct/shuffle: duplicate (id, lsn) rows are harmless because
-        every consumer reduces the family to per-id max(_lsn), and the
-        source parquet is page-hot right after its own write. Cost is
-        O(batch), never O(corpus); subset-visibility reads then touch
-        sidecar bytes only (~16 B/row) instead of re-projecting every
-        segment file. mode="error" for segment writes (names carry a
-        uuid — a collision is a real bug); the backfill passes
-        "overwrite" because ITS names are deterministic and a crashed
-        prior attempt leaves orphan sidecars no manifest references."""
-        rel = os.path.join(PK_DIR, f"pk-{name}")
-        written.select(self.id_col, "_lsn").write.mode(mode).parquet(
-            os.path.join(self.path, rel))
+    def _segment_written(self, full: str, frame: DataFrame, stats_fin):
+        """(written, stats, rows) for the segment `frame` was just written
+        to at `full`. The reader takes the frame's own schema, so no
+        parquet schema-inference job runs; stats_fin runs stats pass 2."""
+        written = self.spark.read.schema(frame.schema).parquet(full)
+        stats = stats_fin(written)
+        rows = stats.pop("__rows", None)
+        if rows is None:
+            rows = written.count()
+        return written, stats, rows
+
+    def _segment_pk(self, written: DataFrame, name: str, stats: dict,
+                    rows: int) -> str | None:
+        """Write a just-written segment's PK sidecar and record the id
+        column's exact ndv in `stats` from it: the sidecar holds one row
+        per distinct id (plus one for NULL ids, which ndv leaves out).
+        Recorded for rows > 1 only: readers treat a 1-row segment as
+        distinct (_manifest_count, _ids_provably_fresh)."""
+        if not rows:
+            return None
+        rel, groups = self._write_pk_sidecar(written, name)
+        s = stats.get(self.id_col)
+        if s is not None and rows > 1:
+            s["ndv"] = groups - (1 if s["null_count"] else 0)
         return rel
+
+    def _write_pk_sidecar(self, written: DataFrame, name: str,
+                          mode: str = "error") -> tuple[str, int]:
+        """Persist the PK sidecar for a segment: its per-id max(_lsn),
+        the reference's persisted PK index (engine.go:2226-2262
+        persistPKIndex; consulted per read at search.go:1092-1105 via
+        internal/pk/mvcc.go:125). Every consumer reduces the family to
+        per-id max(_lsn) anyway; grouping here costs one small shuffle of
+        the batch and yields, as an observed count, the number of id
+        groups — the exact distinct-id count the upsert-freshness proof
+        needs. Returns (sidecar path, id groups). Cost is O(batch), never
+        O(corpus); subset-visibility reads then touch sidecar bytes only
+        (~16 B/row) instead of re-projecting every segment file.
+        mode="error" for segment writes (names carry a uuid — a collision
+        is a real bug); the backfill passes "overwrite" because ITS names
+        are deterministic and a crashed prior attempt leaves orphan
+        sidecars no manifest references."""
+        from pyspark.sql import Observation
+
+        rel = os.path.join(PK_DIR, f"pk-{name}")
+        obs = Observation()
+        (written.groupBy(self.id_col).agg(F.max("_lsn").alias("_lsn"))
+         .observe(obs, F.count(F.lit(1)).alias("ids"))
+         .write.mode(mode).parquet(os.path.join(self.path, rel)))
+        return rel, int(obs.get["ids"])
 
     def _ids_provably_fresh(self, stats: dict, rows: int) -> bool:
         """True iff the just-written segment's id stats PROVE no collision
         with any visible segment: no nulls, EXACT distinct count == rows
-        (the pass-2 ndv — min/max/count alone cannot rule out duplicates
-        inside the batch, e.g. [5,5,7,8] is 4 rows spanning 4 values),
+        (the ndv counted by the PK sidecar write, _segment_pk — min/max/
+        count alone cannot rule out duplicates inside the batch, e.g.
+        [5,5,7,8] is 4 rows spanning 4 values),
         and an id range disjoint from every committed and pending
         segment. Free: reads only stats the write pass already collected.
         Keeps has_upserts False for the common bulk-load pattern, which
@@ -516,8 +544,9 @@ class VectorTable:
         """Attach pass-1 stats to the segment write job (observe_segment_
         stats): the write IS the stats scan, as in the reference's
         streaming StatsCollector inside the segment writer
-        (stats_collector.go:110-445). The id column gets an exact ndv in
-        pass 2 — the upsert-freshness proof requires distinctness."""
+        (stats_collector.go:110-445). The id column's exact ndv comes
+        from the PK sidecar write (_segment_pk) — the upsert-freshness
+        proof requires distinctness."""
         from vecgo_spark.plans.pruning import observe_segment_stats
 
         dim = self.manifest.meta.get("dim")
@@ -526,7 +555,6 @@ class VectorTable:
                          BINCODE_COL, BINNORM_COL),
             vector_col=self.vector_col if dim else None,
             dim=int(dim) if dim else None,
-            ndv_col=self.id_col,
         )
 
     def _next_lsn(self) -> int:
@@ -985,8 +1013,8 @@ class VectorTable:
             if seg.rows == 0:
                 continue
             s = (seg.stats or {}).get(self.id_col)
-            # pass-2 ndv is only collected for rows > 1; a 1-row segment is
-            # trivially dense when min == max
+            # the sidecar ndv is only recorded for rows > 1; a 1-row
+            # segment is trivially dense when min == max
             if (not s or s.get("min") is None or s.get("null_count", 1) != 0
                     or (seg.rows > 1 and s.get("ndv") != seg.rows)
                     or int(s["max"]) - int(s["min"]) + 1 != seg.rows):
@@ -1149,7 +1177,7 @@ class VectorTable:
             # overwrite: deterministic names + publish-after-all means a
             # crashed prior run leaves unreferenced orphans here — the
             # retry must replace them, not wedge on mode("error")
-            seg.pk = self._write_pk_sidecar(
+            seg.pk, _ = self._write_pk_sidecar(
                 src, self._backfill_sidecar_name(seg.path), mode="overwrite")
             return True
 
@@ -1646,7 +1674,7 @@ class VectorTable:
         # (SegmentMeta.pk may be shared): per-cluster sidecars would mean
         # model.k extra write jobs for zero read benefit — the visibility
         # leg wants the whole family anyway
-        pk_rel = self._write_pk_sidecar(written, name) if per else None
+        pk_rel = self._write_pk_sidecar(written, name)[0] if per else None
         segments = []
         for d in sorted(fs_listdir(full)):
             if not d.startswith("_part="):
@@ -2014,11 +2042,7 @@ class VectorTable:
             .sortWithinPartitions(self.id_col)
         )
         live.write.mode("error").parquet(full)
-        written = self.spark.read.parquet(full)
-        stats = stats_fin(written)
-        rows = stats.pop("__rows", None)
-        if rows is None:
-            rows = written.count()
+        written, stats, rows = self._segment_written(full, live, stats_fin)
         size = fs_du(full)
         meta = dict(self.manifest.meta)
         meta["has_upserts"] = False  # dedup materialized
@@ -2035,7 +2059,7 @@ class VectorTable:
         meta.pop("lexical", None)  # ...and stored postings/counters
         meta.pop("semdedup", None)  # ...and stored assignment/pair rows
         self._record_sq_meta(meta, sq_params, pq_books, version, bin_params)
-        pk_rel = self._write_pk_sidecar(written, name) if rows else None
+        pk_rel = self._segment_pk(written, name, stats, rows)
         new = Manifest(
             version=version, lsn=lsn,
             next_id=self.manifest.next_id, created_at=time.time(),
@@ -2076,16 +2100,12 @@ class VectorTable:
         merged, stats_fin = self._observe_stats(
             merged_src.sortWithinPartitions(self.id_col))
         merged.write.mode("error").parquet(full)
-        written = self.spark.read.parquet(full)
-        stats = stats_fin(written)
-        rows = stats.pop("__rows", None)
-        if rows is None:
-            rows = written.count()
+        written, stats, rows = self._segment_written(full, merged, stats_fin)
         size = fs_du(full)
         keep = [s for s in self.manifest.segments if s.path not in picked]
         applied = max((self._tomb_lsn(t) for t in self.manifest.tombstone_files),
                       default=0)
-        pk_rel = self._write_pk_sidecar(written, name) if rows else None
+        pk_rel = self._segment_pk(written, name, stats, rows)
         segments = keep + [SegmentMeta(path=rel, rows=rows, lsn=max_lsn,
                                        bytes=size, stats=stats,
                                        tomb_lsn_applied=applied, pk=pk_rel,
