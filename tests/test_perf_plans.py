@@ -198,3 +198,137 @@ def test_stats_pass2_is_one_narrow_aggregate(spark, monkeypatch):
         assert "BroadcastNestedLoopJoin" not in plan
     n_aggs = {n: len(re.findall(r"partial_\w+\(", p)) for n, p in plans.items()}
     assert 0 < n_aggs[2] == n_aggs[6], n_aggs
+
+
+# ---------------------------------------------------------------------
+# Reads after a commit: visibility comes from one per-snapshot kill frame
+# and readers know their schema, so a read pays for its scan only.
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it launched) — counted under a job
+    group through the status tracker, as perfbench/spans.py does."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _docs(spark, ids, ver):
+    return spark.createDataFrame(
+        [(i, f"alpha beta tok{i % 5} w{ver} end{i % 7}",
+          [float(i) + 0.01 * ver, float(ver)]) for i in ids],
+        "id long, text string, vector array<double>")
+
+
+@pytest.fixture(scope="module")
+def churned(spark, tmp_path_factory):
+    """IVF + lexical/minhash/simhash/semdedup table after a commit with
+    upserts and deletes; every family is refreshed, so no read has a
+    recompute delta leg."""
+    from vecgo_spark.plans import table as tmod
+    from vecgo_spark.plans.table import VectorTable
+
+    t = VectorTable.create(
+        spark, str(tmp_path_factory.mktemp("churned") / "t"), dim=2)
+    t.insert(_docs(spark, range(1, 41), 0))
+    t.commit()
+    t.compact(cluster_by=2)
+    t.build_lexical_index()
+    t.build_minhash_index()
+    t.build_simhash_index()
+    t.build_semdedup_index(t._load_ivf())
+    t.insert(_docs(spark, [3, 5, 41], 1))
+    t.delete([7, 8])
+    t.commit()
+    t.refresh_lexical_index()
+    t.refresh_minhash_index()
+    t.refresh_simhash_index()
+    t.refresh_semdedup_index()
+    assert t.manifest.meta["has_upserts"] and t.manifest.tombstone_files
+    assert not t.manifest.meta["has_dup_ids"]
+    yield t
+    tmod.release_vis_caches()
+
+
+def test_point_get_is_one_job_without_broadcast_or_window(spark, churned):
+    t = churned
+    for rid, want in ((3, 1), (7, 0), (12, 1)):
+        rows, n = _jobs(spark, lambda: t.get(rid).collect())
+        assert len(rows) == want and n == 1, (rid, n)
+        plan = t.get(rid)._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan and "Window" not in plan
+    assert [r["text"] for r in t.get(3).collect()] == [
+        "alpha beta tok3 w1 end3"]
+
+
+def test_repeat_ivf_search_runs_at_most_two_jobs(spark, churned):
+    t = churned
+    first = t.search([4.0, 0.0], k=5, nprobe=2).collect()
+    rows, n = _jobs(spark, lambda: t.search([4.0, 0.0], k=5,
+                                            nprobe=2).collect())
+    assert rows == first and n <= 2, n
+
+
+def test_readers_over_new_file_sets_run_no_jobs(spark, tmp_path):
+    """Segment, tombstone and PK-sidecar readers take the schema recorded
+    at write (or the fixed (id, _lsn) one) instead of inferring it, and
+    the recorded schema is the one inference would find — also when
+    segments order their columns differently (an IVF rewrite appends
+    `_cluster` last, an insert assigns it before `_lsn`)."""
+    from vecgo_spark.plans import table as tmod
+    from vecgo_spark.plans.table import VectorTable
+
+    t = VectorTable.create(spark, str(tmp_path / "t"), dim=2)
+    t.insert(_docs(spark, range(1, 21), 0))
+    t.commit()
+    t.compact(cluster_by=2)
+    t.insert(_docs(spark, [2, 30], 1))
+    t.delete([4])
+    t.commit()
+    segs = t.manifest.segments
+    frame, n = _jobs(spark, lambda: t._segment_df(segs))
+    assert n == 0
+    inferred = spark.read.parquet(*frame.inputFiles()).schema
+    assert frame.schema == inferred
+    assert _jobs(spark, lambda: t._tombstones())[1] == 0
+    tmod.release_vis_caches()
+    assert _jobs(spark, lambda: t._vis_vmax(segs, False))[1] == 0
+    assert _jobs(spark, lambda: t.get(2))[1] == 0
+    assert sorted(r["id"] for r in t.df().collect()) == [
+        i for i in range(1, 21) if i != 4] + [30]
+    tmod.release_vis_caches()
+
+
+def test_visibility_plans_hold_one_join_on_the_kill_frame(spark, churned):
+    """df() over a subset, and the lexical, minhash, simhash and semdedup
+    artifacts, each resolve tombstones AND newer versions with exactly
+    one join on the cached kill frame — no tombstone aggregate join of
+    their own, no latest-LSN window."""
+    from vecgo_spark.operators import lexical_at_rest as lex
+    from vecgo_spark.operators import minhash_at_rest as mar
+    from vecgo_spark.operators import semdedup_at_rest as sdr
+    from vecgo_spark.operators import simhash_at_rest as sar
+
+    t = churned
+    oldest = min(t.manifest.segments, key=lambda s: s.lsn)
+    plans = {
+        "df-subset": t.df(segments=[oldest]),
+        "lexical": lex._visible_rows(t, ["alpha"], markers=True),
+        "minhash": mar.stored_minhash_signatures(t),
+        "simhash": sar.stored_simhash_signatures(t),
+        "semdedup": sdr._visible_assigned(t),
+    }
+    for name, df in plans.items():
+        plan = _optimized(df)
+        assert len(re.findall(r"\bJoin\b", plan)) == 1, (name, plan)
+        assert "_kill_lsn" in plan and "Window" not in plan, name
+        df.count()

@@ -10,10 +10,16 @@ the accounting question CacheStats answers — "is the serving session
 re-paying work the cache should amortize?" — is the same:
 
 - ``pk_index``      — the loaded PK-index frames (plans/table.py
-                      ``_VIS_CACHE``): per-snapshot winning-LSN maps
-                      consulted by every churned subset read, the
-                      analog of the reference's in-memory PK index
-                      (internal/pk/mvcc.go:125).
+                      ``_VIS_CACHE``): per-snapshot (id, _kill_lsn)
+                      kill frames, the analog of the reference's
+                      in-memory PK index (internal/pk/mvcc.go:125).
+                      One lookup per read that resolves visibility on a
+                      snapshot with tombstones or upserts: df() full
+                      and subset scans (so kNN/IVF/quantized search),
+                      the lexical churn path and the minhash, simhash
+                      and semdedup artifact reads. ``get`` is a point
+                      lookup that needs no frame and counts nothing;
+                      clean snapshots count nothing either.
 - ``ivf_model``     — trained IVF centroids (operators/ivf.py
                       ``_MODEL_CACHE``), amortizing per-corpus training.
 - ``pq_codebooks``  — trained PQ/OPQ codebooks (quantization/pq.py

@@ -19,14 +19,14 @@ graph families use (operators/minhash_at_rest.py shape):
             graph_at_rest.refresh_family_dirs core; counters ride the
             same manifest publish through info_update.
   read:     stored rows of live indexed segments ∪ a recompute delta leg
-            for unindexed segments, then EXACTLY df()'s visibility
-            algebra (size-gated tombstone anti-join + latest-LSN-wins
-            upsert filter) replayed on the index rows — so
+            for unindexed segments, then the SAME visibility join df()
+            runs (table._visible: one join on the per-snapshot kill
+            frame) on the index rows — so
             `bm25_search_at_rest` is BIT-IDENTICAL to running
             `bm25.bm25_search` over `tbl.df()`: integer tf/dl/df/N feed
             the same literal-idf fixed-order score expression.
             include_pending=True extends the delta leg to staged
-            (uncommitted) segments and flips the visibility legs to the
+            (uncommitted) segments and flips the kill frame to the
             read-your-writes view — parity target becomes
             `tbl.df(include_pending=True)` (r12 verdict #2; the
             reference's insert-immediately-searchable lexicalIndex.Add,
@@ -39,15 +39,16 @@ pruned) ONCE — per-term docFreq comes from stored per-segment df
 sidecars on clean snapshots (bm25.go:29-53's running docFreq; a
 |terms|-row lookup) and from a persisted shared candidate frame under
 churn — plus either the manifest counters (clean snapshot: zero-job
-N/Σdl, the engine-stats stance of count()) or one narrow marker scan
-(tombstones/upserts in play — per-doc dl is genuinely required for
-N/Σdl); the corpus text column is never touched for indexed segments.
-Under upserts the per-id winning LSN comes from the table's CACHED
-persisted PK-index frame (table._vis_vmax — the same structure the
-vector read path consults; one visibility mechanism for both paths,
-exactly the reference's single loaded PK index, internal/pk/mvcc.go:125
-consulted by search.go:1092-1105 and engine.go:1617-1632), NOT from
-re-aggregating this family's marker rows.
+N/Σdl, the engine-stats stance of count()) or, under churn, ONE
+aggregate over the visible query-term postings and marker rows that
+yields N, Σdl and every query term's df together (per-doc dl is
+genuinely required for N/Σdl); the corpus text column is never touched
+for indexed segments. Tombstones and upserts resolve against the
+table's CACHED per-snapshot kill frame (table._vis_vmax — the same
+structure the vector read path consults; one visibility mechanism for
+every path, exactly the reference's single loaded PK index,
+internal/pk/mvcc.go:125 consulted by search.go:1092-1105 and
+engine.go:1617-1632), NOT by re-aggregating this family's marker rows.
 """
 
 from __future__ import annotations
@@ -64,10 +65,14 @@ from vecgo_spark.operators.bm25 import B, K1, tokenize_expr, tokenize_py
 FAMILY = "lexical"
 
 
-def _segment_rows(tbl, segs, text_col: str) -> DataFrame:
+def _segment_rows(tbl, segs, text_col: str,
+                  terms: list[str] | None = None) -> DataFrame:
     """(id, _lsn, _seg, term, tf, dl) posting + marker rows for every RAW
     row version of `segs` (markers keep shadowed/zero-token versions
-    visible to the upsert algebra, the minhash NULL-sig stance)."""
+    visible to the upsert algebra, the minhash NULL-sig stance). With
+    `terms` (a query's delta leg) only those terms' postings, counted in
+    place per row — the same tf the grouped build writes, without its
+    shuffle."""
     from vecgo_spark.functions.hashing import eval_once
     from vecgo_spark.operators.graph_at_rest import seg_tag_expr
 
@@ -76,15 +81,27 @@ def _segment_rows(tbl, segs, text_col: str) -> DataFrame:
         eval_once(tokenize_expr(text_col)).alias("toks"),
     ).withColumn("_seg", seg_tag_expr()).withColumn(
         "dl", F.size("toks").cast("long"))
-    postings = (
-        base.select("id", "_lsn", "_seg", "dl", F.explode("toks").alias("term"))
-        .groupBy("id", "_lsn", "_seg", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
+    if terms is None:
+        postings = (
+            base.select("id", "_lsn", "_seg", "dl", F.explode("toks").alias("term"))
+            .groupBy("id", "_lsn", "_seg", "dl", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+        )
+    else:
+        def tf(t):
+            return F.size(F.filter("toks", lambda x: x == F.lit(t)))
+
+        tfs = F.array(*[F.struct(F.lit(t).alias("term"),
+                                 tf(t).cast("long").alias("tf"))
+                        for t in terms])
+        postings = base.select("id", "_lsn", "_seg", "dl", F.inline(
+            F.filter(tfs, lambda p: p["tf"] > 0)))
     markers = base.select(
         "id", "_lsn", "_seg", "dl",
         F.lit(None).cast("string").alias("term"), F.lit(0).cast("long").alias("tf"))
     cols = ["id", "_lsn", "_seg", "term", "tf", "dl"]
+    if terms == []:
+        return markers.select(*cols)
     return postings.select(*cols).unionByName(markers.select(*cols))
 
 
@@ -211,9 +228,8 @@ def _visible_rows(tbl, terms: list[str] | None, markers: bool,
     the reference serves staged rows immediately through memtable
     lexicalIndex.Add, engine.go:833-921): staged-but-uncommitted
     segments ride the recompute delta leg (they are real written
-    parquet, just unpublished) and the tombstone/winning-LSN legs flip
-    to the pending-inclusive view exactly as df(include_pending=True)
-    does — so the at-rest search sees the same world as the plain path
+    parquet, just unpublished) and the kill frame flips to the
+    pending-inclusive view exactly as df(include_pending=True) does — so the at-rest search sees the same world as the plain path
     over the writer's snapshot. Other readers still see committed-only."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
 
@@ -243,66 +259,75 @@ def _visible_rows(tbl, terms: list[str] | None, markers: bool,
     if include_pending:
         delta = delta + list(tbl._pending)
     if delta:
-        legs.append(pick(_segment_rows(tbl, delta, info["text_col"])))
+        legs.append(pick(_segment_rows(tbl, delta, info["text_col"], terms)))
     if not legs:
         return tbl.spark.createDataFrame(
             [], "id long, _lsn long, _seg string, term string, tf long, dl long")
     base = legs[0]
     for leg in legs[1:]:
         base = base.unionByName(leg)
-    tomb = tbl._tombstones(include_pending=include_pending)
-    if tomb is not None:
-        tmax = (tomb.groupBy(tbl.id_col).agg(F.max("_lsn").alias("_tomb_lsn"))
-                .withColumnRenamed(tbl.id_col, "id"))
-        if tbl.tomb_broadcastable(include_pending):  # size-gated
-            tmax = F.broadcast(tmax)
-        base = (
-            base.join(tmax, "id", "left")
-            .where(F.col("_tomb_lsn").isNull() | (F.col("_lsn") > F.col("_tomb_lsn")))
-            .drop("_tomb_lsn")
-        )
-    if man.meta.get("has_upserts"):
-        # latest version wins — resolved against the table's cached
-        # per-id winning-LSN frame (the persisted PK index the vector
-        # read path already consults, table._vis_vmax / mvcc.go:125):
-        # ONE visibility mechanism for both paths, as in the reference
-        # (search.go:1092-1105 and the lexical resolve engine.go:1617-1632
-        # both ask the same loaded PK index). Before r12 this leg
-        # re-derived per-id max LSN from its own MARKER rows, which
-        # forced every term-filtered read to also scan the marker range
-        # and re-aggregate — a second, postings-sized visibility
-        # mechanism. The frame covers the FULL snapshot (sidecar bytes
-        # only), so a term-filtered subset can never elect a stale
-        # version whose postings happen to match. ALL rows of the
-        # winning version survive the equality join (an id's postings
-        # share one _lsn) — same survivors as the old max-filter.
-        full = list(man.segments)
-        if include_pending:
-            full = full + list(tbl._pending)
-        vmax = tbl._vis_vmax(full, include_pending=include_pending)
-        if vmax is not None:
-            vmax = vmax.withColumnRenamed(tbl.id_col, "id")
-            if sum(s.rows for s in full) <= _vis_broadcast_cap():
-                vmax = F.broadcast(vmax)
-            base = (base.join(vmax, "id", "left")
-                    .where(F.col("_lsn") == F.col("_vis_lsn"))
-                    .drop("_vis_lsn"))
-    return base
-
-
-def _vis_broadcast_cap() -> int:
-    from vecgo_spark.plans.table import TOMB_BROADCAST_MAX_IDS
-    return TOMB_BROADCAST_MAX_IDS
+    # visibility from the table's per-snapshot kill frame (the loaded PK
+    # index every read path consults, table._visible / mvcc.go:125): the
+    # frame covers the FULL snapshot from sidecar and tombstone bytes, so
+    # a term-filtered subset never elects a stale version whose postings
+    # happen to match, and every row of the live version survives (an
+    # id's postings and marker share one _lsn)
+    return tbl._visible(base, include_pending, id_col="id")
 
 
 # churn-path (n_docs, total_len) memo — the reference holds N/Σdl as
 # RUNNING counters that are simply read per query (bm25.go:29-53); on a
-# churned snapshot we must derive them once from the marker rows + the
-# visibility algebra, but the result is immutable per committed snapshot,
+# churned snapshot we must derive them from the marker rows + the
+# visibility join, but the result is immutable per committed snapshot,
 # so repeat queries read two ints instead of re-running the marker scan.
 # Keyed like the vis cache (path + version); bounded, oldest-first.
 _COUNTS_CACHE: dict[tuple, tuple[int, int]] = {}
 _COUNTS_CACHE_CAP = 64
+
+
+def _counts_key(tbl, include_pending: bool) -> tuple:
+    """Memo key of a snapshot's (n_docs, total_len). The segment paths
+    (uuid-suffixed) in _snapshot_id keep a table re-created at the same
+    path, whose versions restart, from reading a stale entry; the
+    artifact path keeps a rebuild from it; the pending state keeps the
+    writer's staged view and the committed view apart."""
+    man = tbl.manifest
+    return (tbl.path, man.version, man.meta[FAMILY].get("path"),
+            _snapshot_id(man), include_pending, len(tbl._pending),
+            len(tbl._pending_tombs))
+
+
+def _clean(tbl, include_pending: bool) -> bool:
+    """No tombstones, no upserts, no staged rows in view and every
+    segment indexed: then the manifest counters and df sidecars are the
+    live corpus statistics."""
+    man = tbl.manifest
+    indexed = set(man.meta[FAMILY]["segments"])
+    return (not man.tombstone_files and not tbl._pending_tombs
+            and not man.meta.get("has_upserts")
+            and not (include_pending and tbl._pending)
+            and all(s.path in indexed for s in man.segments))
+
+
+def _churn_stats(tbl, terms: list[str],
+                 include_pending: bool) -> tuple[int, int, dict[str, int]]:
+    """(n_docs, total_len, {term: df}) of a churned snapshot from ONE
+    aggregate over its visible marker rows and query-term postings (one
+    posting row per (doc version, term), and the visibility join leaves
+    one version per id). Memoizes (n_docs, total_len) per snapshot."""
+    marker = F.col("term").isNull()
+    row = (_visible_rows(tbl, terms=terms, markers=True,
+                         include_pending=include_pending)
+           .agg(F.count(F.when(marker, 1)).alias("n"),
+                F.sum(F.when(marker, F.col("dl"))).alias("total"),
+                *[F.count(F.when(F.col("term") == F.lit(t), 1)).alias(f"df_{i}")
+                  for i, t in enumerate(terms)])
+           .first())
+    n, total = int(row["n"]), int(row["total"] or 0)
+    while len(_COUNTS_CACHE) >= _COUNTS_CACHE_CAP:
+        _COUNTS_CACHE.pop(next(iter(_COUNTS_CACHE)))
+    _COUNTS_CACHE[_counts_key(tbl, include_pending)] = (n, total)
+    return n, total, {t: int(row[f"df_{i}"]) for i, t in enumerate(terms)}
 
 
 def corpus_counts(tbl, include_pending: bool = False) -> tuple[int, int]:
@@ -310,47 +335,23 @@ def corpus_counts(tbl, include_pending: bool = False) -> tuple[int, int]:
     tombstones, no upserts, everything indexed, no staged rows in view)
     → summed from the manifest counters with ZERO jobs (the reference's
     running counters / count()'s O(#segments) stance); otherwise one
-    narrow marker scan with the visibility algebra — per-doc dl
-    genuinely needs it — run ONCE per snapshot state (memoized: the
-    reference reads running counters per query; repeat churn queries
-    here read the memo)."""
+    narrow marker aggregate through the visibility join — per-doc dl
+    genuinely needs it — run ONCE per snapshot state (memoized, and
+    filled by the first churn-path query's _churn_stats)."""
     info = tbl.manifest.meta.get(FAMILY)
     if info is None:
         raise KeyError("table has no lexical index; build it first")
     man = tbl.manifest
     counts = info.get("seg_counts") or {}
-    clean = (not man.tombstone_files and not tbl._pending_tombs
-             and not man.meta.get("has_upserts")
-             and not (include_pending and tbl._pending)
-             and all(s.path in counts for s in man.segments))
-    if clean:
+    if _clean(tbl, include_pending) and all(s.path in counts
+                                            for s in man.segments):
         n = sum(counts[s.path]["docs"] for s in man.segments)
         total = sum(counts[s.path]["len"] for s in man.segments)
         return n, total
-    # the marker scan reads committed rows only, so the memo key is the
-    # committed snapshot identity (+ the lexical artifact version, which
-    # changes what is stored vs recomputed but not the answer — included
-    # anyway so a rebuild never serves through a stale entry). Segment
-    # paths (uuid-suffixed) ride the key so a table DROPPED and
-    # RE-CREATED at the same path — whose version numbers restart — can
-    # never serve a stale entry (the _VIS_CACHE keying stance). The
-    # pending view appends its state (the _VIS_CACHE len(_pending)
-    # stance) so a staged batch never reads a stale committed-view memo
-    # and vice versa.
-    key = (tbl.path, man.version, info.get("path"), _snapshot_id(man),
-           include_pending, len(tbl._pending), len(tbl._pending_tombs))
-    hit = _COUNTS_CACHE.get(key)
+    hit = _COUNTS_CACHE.get(_counts_key(tbl, include_pending))
     if hit is not None:
         return hit
-    row = (_visible_rows(tbl, terms=[], markers=True,
-                         include_pending=include_pending)
-           .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("total"))
-           .first())
-    out = (int(row["n"]), int(row["total"] or 0))
-    while len(_COUNTS_CACHE) >= _COUNTS_CACHE_CAP:
-        _COUNTS_CACHE.pop(next(iter(_COUNTS_CACHE)))
-    _COUNTS_CACHE[key] = out
-    return out
+    return _churn_stats(tbl, [], include_pending)[:2]
 
 
 # persisted candidate frames (churn path), KEYED BY TABLE PATH so two
@@ -464,12 +465,7 @@ def _stored_term_df(tbl, info, terms: list[str],
     from vecgo_spark.plans.manifest import fs_exists
 
     man = tbl.manifest
-    indexed = set(info["segments"])
-    clean = (not man.tombstone_files and not tbl._pending_tombs
-             and not man.meta.get("has_upserts")
-             and not (include_pending and tbl._pending)
-             and all(s.path in indexed for s in man.segments))
-    if not clean:
+    if not _clean(tbl, include_pending):
         return None
     rels = [df_dir(p) for p in blob_paths(info)]
     if not all(fs_exists(os.path.join(tbl.path, r)) for r in rels):
@@ -500,15 +496,16 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
     set, so a REPEAT query serves both from the keyed cache — the
     reference's resident-index economics (its postings live in memory;
     here residency is the persisted frame; release_caches() frees them).
-    A fresh CLEAN-snapshot query takes per-term docFreq from the STORED
-    df sidecars (a |terms|-row lookup, the reference's running counters)
-    and the scoring pass reads the candidate postings exactly once —
-    persisting them for reuse ONLY when the sidecar dfmap proves the
-    candidate set is bounded (Σ df ≤ _RESIDENT_MAX_CANDIDATES; a
-    common-term corpus-sized frame on a 100 TB table must stream, never
-    occupy the block store). A fresh CHURN-path query persists
-    unconditionally so the df aggregate and the score pass share one
-    read (the df aggregate already materializes it)."""
+    A fresh CLEAN-snapshot query takes N/Σdl from the manifest counters
+    and per-term docFreq from the STORED df sidecars (a |terms|-row
+    lookup, the reference's running counters); a fresh CHURN-path query
+    takes N, Σdl and every docFreq from ONE aggregate over the visible
+    markers and query-term postings (_churn_stats). Either way the
+    dfmap bounds |candidates| before the scoring pass runs, and the
+    candidate frame is persisted for repeats ONLY when that bound is
+    small (Σ df ≤ _RESIDENT_MAX_CANDIDATES; a common-term corpus-sized
+    frame on a 100 TB table must stream, never occupy the block store).
+    The scoring plan reads postings only — no marker rows."""
     spark = tbl.spark
     qterms: dict[str, int] = {}
     for t in tokenize_py(query_text):
@@ -516,8 +513,20 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
     if not qterms:
         return spark.createDataFrame([], "id long, score double")
     terms = sorted(qterms)
-
-    n_docs, total_len = corpus_counts(tbl, include_pending=include_pending)
+    info = tbl.manifest.meta.get(FAMILY)
+    if info is None:
+        raise KeyError("table has no lexical index; build it first")
+    # pending state rides the key (the _VIS_CACHE stance): a staged
+    # batch never reuses a committed-view frame and vice versa
+    ckey = (tbl.manifest.version, info.get("path"),
+            _snapshot_id(tbl.manifest), tuple(terms),
+            include_pending, len(tbl._pending), len(tbl._pending_tombs))
+    hit = _cached_candidate(tbl.path, ckey)
+    dfmap = None
+    if hit is None and not _clean(tbl, include_pending):
+        n_docs, total_len, dfmap = _churn_stats(tbl, terms, include_pending)
+    else:
+        n_docs, total_len = corpus_counts(tbl, include_pending=include_pending)
     avg_dl = float(total_len) / float(n_docs) if n_docs else 0.0
     if n_docs == 0 or avg_dl == 0.0:
         return spark.createDataFrame([], "id long, score double")
@@ -525,13 +534,6 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
 
     from vecgo_spark import cache_stats
 
-    info = tbl.manifest.meta[FAMILY]
-    # pending state rides the key (the _VIS_CACHE stance): a staged
-    # batch never reuses a committed-view frame and vice versa
-    ckey = (tbl.manifest.version, info.get("path"),
-            _snapshot_id(tbl.manifest), tuple(terms),
-            include_pending, len(tbl._pending), len(tbl._pending_tombs))
-    hit = _cached_candidate(tbl.path, ckey)
     cache_stats.record("lexical_candidates", hit is not None,
                        scope=tbl.path)
     if hit is not None:
@@ -539,8 +541,12 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
         # |terms|-row sidecar lookup runs
         cand, dfmap = hit
     else:
-        dfmap = _stored_term_df(tbl, info, terms,
-                                include_pending=include_pending)
+        if dfmap is None:
+            dfmap = _stored_term_df(tbl, info, terms,
+                                    include_pending=include_pending)
+        if dfmap is None:  # clean snapshot, dirs predate the df sidecars
+            dfmap = _churn_stats(tbl, terms, include_pending)[2]
+        # the scoring pass reads postings only — no marker rows
         cand = (
             _visible_rows(tbl, terms=terms, markers=False,
                           include_pending=include_pending)
@@ -550,17 +556,7 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
                      F.max(F.when(F.col("term") == F.lit(t), F.col("tf"))),
                      F.lit(0)).alias(f"tf_{i}") for i, t in enumerate(terms)])
         )
-        if dfmap is None:  # churn path, first time for this term set
-            cand = cand.persist()
-            row = cand.agg(
-                *[F.sum((F.col(f"tf_{i}") > 0).cast("long")).alias(f"df_{i}")
-                  for i in range(len(terms))],
-            ).first()
-            dfmap = {t: int(row[f"df_{i}"] or 0) for i, t in enumerate(terms)}
-            _cache_candidate(tbl.path, ckey, cand, dfmap)
-        elif sum(dfmap.values()) <= _RESIDENT_MAX_CANDIDATES:
-            # clean path: the sidecar dfmap bounds |candidates| BEFORE
-            # any job runs — small enough to keep resident for repeats
+        if sum(dfmap.values()) <= _RESIDENT_MAX_CANDIDATES:
             cand = cand.persist()
             _cache_candidate(tbl.path, ckey, cand, dfmap)
 

@@ -21,10 +21,10 @@ operators/graph_at_rest.py):
   refresh:  segments committed after the last build/refresh get their own
             dir (existing dirs are immutable); meta grows paths/segments.
   read:     stored rows of still-live indexed segments ∪ a recompute
-            delta leg for unindexed segments, then EXACTLY the snapshot
-            visibility algebra of VectorTable.df() — tombstone-LSN
-            anti-join and latest-LSN-wins upsert dedup — so the result is
-            bit-identical to minhash_signatures(tbl.df()).
+            delta leg for unindexed segments, then the SAME visibility
+            join VectorTable.df() runs (table._visible: one join on the
+            per-snapshot kill frame of tombstones and newer versions) —
+            so the result is bit-identical to minhash_signatures(tbl.df()).
   vacuum /  dirs are referenced via meta["minhash"] paths (collected once
   compact:  unreferenced); FULL compaction rewrites every segment, which
             invalidates the entry — compact(reindex=True, the default)
@@ -32,9 +32,9 @@ operators/graph_at_rest.py):
             params (compaction.go:102-152 re-indexes during compaction).
 
 Scale posture: the artifact is H+3 fixed-width columns per doc; the read
-path is id-arithmetic only (no text touched for indexed segments), the
-tombstone join is the same broadcast df() uses, and the upsert window is
-partitioned by id (bounded groups).
+path is id-arithmetic only (no text touched for indexed segments), and
+visibility is the same size-gated broadcast join on the cached kill frame
+that df() uses.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from vecgo_spark.operators.dedup import NUM_HASHES, minhash_signatures
 
@@ -142,10 +141,10 @@ def stored_minhash_signatures(tbl, include_pending: bool = False) -> DataFrame:
     """(id, m0..m{H-1}) for the CURRENT live snapshot, served from stored
     signatures wherever a live segment is indexed; bit-identical to
     minhash_signatures(tbl.df(), ...) by construction (determinism +
-    df()'s own visibility algebra replayed on the signature rows).
+    df()'s own visibility join applied to the signature rows).
     include_pending=True is the writer's read-your-writes view (r12
     verdict #2): staged segments ride the recompute delta leg and the
-    visibility legs flip to the pending-inclusive view — parity target
+    kill frame flips to the pending-inclusive view — parity target
     becomes minhash_signatures(tbl.df(include_pending=True), ...)."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
 
@@ -176,21 +175,7 @@ def stored_minhash_signatures(tbl, include_pending: bool = False) -> DataFrame:
     base = legs[0]
     for leg in legs[1:]:
         base = base.unionByName(leg)
-    tomb = tbl._tombstones(include_pending=include_pending)
-    if tomb is not None:
-        tmax = (tomb.groupBy(tbl.id_col).agg(F.max("_lsn").alias("_tomb_lsn"))
-                .withColumnRenamed(tbl.id_col, "id"))
-        if tbl.tomb_broadcastable(include_pending):  # size-gated
-            tmax = F.broadcast(tmax)
-        base = (
-            base.join(tmax, "id", "left")
-            .where(F.col("_tomb_lsn").isNull() | (F.col("_lsn") > F.col("_tomb_lsn")))
-            .drop("_tomb_lsn")
-        )
-    if man.meta.get("has_upserts"):
-        w = Window.partitionBy("id").orderBy(F.col("_lsn").desc())
-        base = (base.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1).drop("_rn"))
+    base = tbl._visible(base, include_pending, id_col="id")
     # shingle-less row versions carried NULL sigs for shadowing; now that
     # visibility picked the live version, drop them (minhash_signatures
     # drops such docs too)

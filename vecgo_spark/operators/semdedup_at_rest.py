@@ -488,14 +488,14 @@ def _publish_repair_only(tbl, info, model, repair, max_dirs, write_dir,
 def _visible_assigned(tbl, include_pending: bool = False) -> DataFrame:
     """Assigned rows of the CURRENT live snapshot — stored legs ∪ a
     recompute delta leg for unindexed segments (flagged `_delta`), then
-    EXACTLY df()'s visibility algebra (size-gated tombstone anti-join +
-    winning-LSN upsert filter via the table's cached PK-index frame).
+    the SAME visibility join df() runs (table._visible: one join on the
+    table's cached per-snapshot kill frame).
 
     include_pending=True is the writer's read-your-writes view (the
     lexical_at_rest._visible_rows recipe, r12 verdict #2): staged
     segments ride the recompute delta leg (real written parquet, just
-    unpublished) and the tombstone/winning-LSN legs flip to the
-    pending-inclusive view exactly as df(include_pending=True) does."""
+    unpublished) and the kill frame flips to the pending-inclusive view
+    exactly as df(include_pending=True) does."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
 
     info = tbl.manifest.meta.get(FAMILY)
@@ -525,35 +525,7 @@ def _visible_assigned(tbl, include_pending: bool = False) -> DataFrame:
     base = legs[0]
     for leg in legs[1:]:
         base = base.unionByName(leg)
-    tomb = tbl._tombstones(include_pending=include_pending)
-    if tomb is not None:
-        tmax = (tomb.groupBy(tbl.id_col).agg(F.max("_lsn").alias("_tomb_lsn"))
-                .withColumnRenamed(tbl.id_col, "id"))
-        if tbl.tomb_broadcastable(include_pending):  # size-gated
-            tmax = F.broadcast(tmax)
-        base = (
-            base.join(tmax, "id", "left")
-            .where(F.col("_tomb_lsn").isNull()
-                   | (F.col("_lsn") > F.col("_tomb_lsn")))
-            .drop("_tomb_lsn")
-        )
-    if man.meta.get("has_upserts"):
-        # winning LSN from the table's cached PK-index frame — the ONE
-        # visibility mechanism every serving path consults (mvcc.go:125)
-        full = list(man.segments)
-        if include_pending:
-            full = full + list(tbl._pending)
-        vmax = tbl._vis_vmax(full, include_pending=include_pending)
-        if vmax is not None:
-            from vecgo_spark.plans.table import TOMB_BROADCAST_MAX_IDS
-
-            vmax = vmax.withColumnRenamed(tbl.id_col, "id")
-            if sum(s.rows for s in full) <= TOMB_BROADCAST_MAX_IDS:
-                vmax = F.broadcast(vmax)
-            base = (base.join(vmax, "id", "left")
-                    .where(F.col("_lsn") == F.col("_vis_lsn"))
-                    .drop("_vis_lsn"))
-    return base
+    return tbl._visible(base, include_pending, id_col="id")
 
 
 def semdedup_pairs_at_rest(tbl, include_pending: bool = False) -> DataFrame:

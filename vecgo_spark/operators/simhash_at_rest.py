@@ -14,8 +14,8 @@ Shape (shared with the minhash/graph/lexical families):
   refresh:  new segments get their own immutable dir; fold at the
             max_dirs cap (graph_at_rest.refresh_family_dirs core).
   read:     stored rows of live indexed segments ∪ a recompute delta leg
-            for unindexed segments, then df()'s visibility algebra
-            (size-gated tombstone anti-join + latest-LSN upsert dedup) —
+            for unindexed segments, then df()'s visibility join (one
+            join on the per-snapshot kill frame, table._visible) —
             bit-identical to dedup.simhash(tbl.df()) by determinism.
   compact:  full compaction rebuilds the family (table.compact reindex);
   vacuum:   dirs referenced via meta["simhash"] paths.
@@ -33,7 +33,6 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from vecgo_spark.operators import dedup
 
@@ -121,7 +120,7 @@ def stored_simhash_signatures(tbl) -> DataFrame:
     """(id, simhash) for the CURRENT live snapshot, served from stored
     signatures wherever a live segment is indexed; bit-identical to
     dedup.simhash(tbl.df(), ...) by construction (determinism + df()'s
-    visibility algebra replayed on the signature rows)."""
+    visibility join applied to the signature rows)."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
 
     info = tbl.manifest.meta.get(FAMILY)
@@ -147,21 +146,7 @@ def stored_simhash_signatures(tbl) -> DataFrame:
     base = legs[0]
     for leg in legs[1:]:
         base = base.unionByName(leg)
-    tomb = tbl._tombstones()
-    if tomb is not None:
-        tmax = (tomb.groupBy(tbl.id_col).agg(F.max("_lsn").alias("_tomb_lsn"))
-                .withColumnRenamed(tbl.id_col, "id"))
-        if tbl.tomb_broadcastable():  # size-gated — table.tomb_broadcastable
-            tmax = F.broadcast(tmax)
-        base = (
-            base.join(tmax, "id", "left")
-            .where(F.col("_tomb_lsn").isNull() | (F.col("_lsn") > F.col("_tomb_lsn")))
-            .drop("_tomb_lsn")
-        )
-    if man.meta.get("has_upserts"):
-        w = Window.partitionBy("id").orderBy(F.col("_lsn").desc())
-        base = (base.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1).drop("_rn"))
+    base = tbl._visible(base, id_col="id")
     # token-less row versions carried NULL sigs for shadowing; visibility
     # has picked the live version — drop them (simhash() emits no row for
     # such docs either)

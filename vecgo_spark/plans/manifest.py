@@ -60,6 +60,11 @@ class SegmentMeta:
     # target_level. 0 for pre-level manifests and for policies that don't
     # use levels — only LeveledPolicy reads it.
     level: int = 0
+    # key of this segment's Spark schema in Manifest.meta["schemas"]
+    # (each distinct schema is stored once per table), recorded at write
+    # so readers skip parquet schema inference. None for segments written
+    # before schemas were recorded → readers infer.
+    schema: str | None = None
 
 
 @dataclass

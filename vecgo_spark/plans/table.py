@@ -8,12 +8,14 @@ Reference lifecycle mapping (SURVEY §2.1, §3.3):
                      data staged as parquet, unreferenced until commit
   commit()           Commit: stats collection + atomic manifest publish
                      (engine.go:1700-1974); nothing durable before this
-  delete(ids)        tombstone file + MVCC-style anti-join at read
+  delete(ids)        tombstone file; hidden at read by the kill frame
                      (engine.go:1186-1302, tombstone.go)
-  upsert             same-id re-insert wins by LSN; read-side dedup via
-                     row_number (engine.go:993-1005)
-  scan/df()          snapshot read: manifest files → anti-join tombstones
-                     → latest-LSN dedup (engine.go:1378-1481)
+  upsert             same-id re-insert wins by LSN; hidden at read by
+                     the kill frame (engine.go:993-1005)
+  scan/df()          snapshot read: manifest files → one join on the
+                     per-snapshot kill frame (engine.go:1378-1481)
+  get(id)            point lookup: top-1 by LSN over the id-filtered
+                     segment ∪ tombstone scans
   open(version=…)    time travel WithVersion/WithTimestamp (vecgo.go:422-448)
   compact()          merge segments, drop tombstones, re-stats, publish
                      (internal/engine/compaction.go)
@@ -22,8 +24,9 @@ Reference lifecycle mapping (SURVEY §2.1, §3.3):
 
 Scale posture: the driver-side state is O(#segments) manifest JSON; reads
 are parquet scans with manifest-stats file pruning (plans/pruning.py) on
-top of Catalyst's row-group pruning; the upsert-dedup window only runs
-when the manifest says duplicate ids are possible.
+top of Catalyst's row-group pruning; visibility is one join on a
+per-snapshot (id, _kill_lsn) frame, built once from the PK sidecars and
+tombstones and only when the snapshot has either.
 """
 
 from __future__ import annotations
@@ -79,14 +82,14 @@ TOMB_BROADCAST_MAX_IDS = 1_000_000
 # max-LSN file once more than this many remain (tombstone migration)
 TOMB_FOLD_MAX_FILES = 8
 FAMILY_LEXICAL = "lexical"
-# loaded PK-index registry: (path, version, pending-state, snapshot) →
-# (persisted per-id winning-LSN frame, sidecar files it reads, uncovered
-# fallback segment paths) — see VectorTable._vis_vmax. Size of one entry
-# is O(distinct ids) — the reference's in-memory PK index has the same
-# footprint (pk/mvcc.go paged array); the cap bounds a session serving
-# many churned snapshots. The recorded sources let tests pin that the
-# leg reads ONLY `_pk/` bytes (a persisted frame hides its scan behind
-# InMemoryRelation, so inputFiles() can't).
+# loaded PK-index registry: (path, version, pending-state, snapshot,
+# tombstone set) → (persisted per-id kill frame, sidecar files it reads,
+# uncovered fallback segment paths) — see VectorTable._vis_vmax. Size of
+# one entry is O(distinct ids) — the reference's in-memory PK index has
+# the same footprint (pk/mvcc.go paged array); the cap bounds a session
+# serving many churned snapshots. The recorded sources let tests pin
+# that the version leg reads ONLY `_pk/` bytes (a persisted frame hides
+# its scan behind InMemoryRelation, so inputFiles() can't).
 _VIS_CACHE: dict[tuple, tuple[DataFrame, list[str], list[str]]] = {}
 VIS_CACHE_CAP = 4
 
@@ -344,7 +347,8 @@ class VectorTable:
             # commit concrete-type pins only now that the segment holding
             # those types exists on disk — a failed write leaves no trace
             self.manifest.meta.setdefault("schema_concrete", {}).update(new_pins)
-        written, stats, rows = self._segment_written(full, df, stats_fin)
+        written, stats, rows, schema = self._segment_written(
+            full, df, stats_fin)
         pk_rel = self._segment_pk(written, name, stats, rows)
         if not assign_ids:
             s_id = stats.get(self.id_col) or {}
@@ -377,7 +381,7 @@ class VectorTable:
                 deduped.write.mode("error").parquet(full)
                 fs_rmtree(old_full)
                 fs_rmtree(os.path.join(self.path, pk_rel))
-                written, stats, rows = self._segment_written(
+                written, stats, rows, schema = self._segment_written(
                     full, deduped, stats_fin)
                 pk_rel = self._segment_pk(written, name, stats, rows)
                 s_id = stats.get(self.id_col) or {}
@@ -400,19 +404,46 @@ class VectorTable:
                 self.manifest.next_id = max(self.manifest.next_id, int(s["max"]) + 1)
         size = fs_du(full)
         self._pending.append(SegmentMeta(path=rel, rows=rows, lsn=lsn, bytes=size,
-                                         stats=stats, pk=pk_rel))
+                                         stats=stats, pk=pk_rel, schema=schema))
         return rows, size
 
     def _segment_written(self, full: str, frame: DataFrame, stats_fin):
-        """(written, stats, rows) for the segment `frame` was just written
-        to at `full`. The reader takes the frame's own schema, so no
-        parquet schema-inference job runs; stats_fin runs stats pass 2."""
+        """(written, stats, rows, schema key) for the segment `frame` was
+        just written to at `full`. The reader takes the frame's own
+        schema, so no parquet schema-inference job runs; stats_fin runs
+        stats pass 2."""
         written = self.spark.read.schema(frame.schema).parquet(full)
         stats = stats_fin(written)
         rows = stats.pop("__rows", None)
         if rows is None:
             rows = written.count()
-        return written, stats, rows
+        return written, stats, rows, self._record_schema(written.schema)
+
+    def _record_schema(self, schema) -> str:
+        """Key of a segment's Spark schema in meta["schemas"], adding it
+        on first sight: each distinct schema is stored once per table,
+        and the next published manifest carries it."""
+        import hashlib
+
+        text = schema.json()
+        key = hashlib.sha256(text.encode()).hexdigest()[:16]
+        self.manifest.meta.setdefault("schemas", {})[key] = text
+        return key
+
+    def _recorded_schema(self, segments: list[SegmentMeta]):
+        """The schema a parquet read of `segments` would infer, from the
+        schemas recorded at write — or None when a segment recorded none
+        (the reader then infers). Inference reads the footer of the data
+        file whose path sorts first (ParquetUtils.splitFiles), so that
+        segment's schema is the answer even when other segments order
+        their columns differently."""
+        from pyspark.sql.types import StructType
+
+        if not segments or any(s.schema is None for s in segments):
+            return None
+        first = min(segments, key=lambda s: s.path + "/")
+        text = self.manifest.meta.get("schemas", {}).get(first.schema)
+        return StructType.fromJson(json.loads(text)) if text else None
 
     def _segment_pk(self, written: DataFrame, name: str, stats: dict,
                     rows: int) -> str | None:
@@ -691,7 +722,7 @@ class VectorTable:
 
     # --------------------------------------------------------------- read
 
-    def _read_parquet_cached(self, files: list[str]) -> DataFrame:
+    def _read_parquet_cached(self, files: list[str], schema=None) -> DataFrame:
         # Module-level (r14): the cache was per-VectorTable-instance, but
         # serving entry points re-OPEN the table per query (one pinned
         # snapshot per instance — the honest serving model), so every
@@ -701,11 +732,16 @@ class VectorTable:
         # uuid-named and never rewritten after publish, so the LAZY
         # reader frame is identical for every instance of a live
         # session. Plan METADATA only — every execution still scans the
-        # parquet files. Bounded; oldest evicted.
+        # parquet files. Bounded; oldest evicted. A known `schema` (the
+        # one recorded at write) skips the schema-inference job a new
+        # file set would otherwise launch.
         key = (self._reader_key, *files)
         df = _READER_CACHE.get(key)
         if df is None:
-            df = self.spark.read.parquet(*files)
+            reader = self.spark.read
+            if schema is not None:
+                reader = reader.schema(schema)
+            df = reader.parquet(*files)
             if len(_READER_CACHE) >= 256:
                 _READER_CACHE.pop(next(iter(_READER_CACHE)))
             _READER_CACHE[key] = df
@@ -715,42 +751,51 @@ class VectorTable:
         if not segments:
             return None
         return self._read_parquet_cached(
-            [os.path.join(self.path, s.path) for s in segments])
+            [os.path.join(self.path, s.path) for s in segments],
+            self._recorded_schema(segments))
+
+    def _tomb_files(self, include_pending: bool = False) -> list[str]:
+        tombs = list(self.manifest.tombstone_files)
+        return tombs + self._pending_tombs if include_pending else tombs
 
     def _tombstones(self, include_pending: bool = False) -> DataFrame | None:
-        tombs = list(self.manifest.tombstone_files)
-        if include_pending:
-            tombs += self._pending_tombs
+        # every delete path writes (id long, _lsn long)
+        tombs = self._tomb_files(include_pending)
         if not tombs:
             return None
         return self._read_parquet_cached(
-            [os.path.join(self.path, t) for t in tombs])
+            [os.path.join(self.path, t) for t in tombs],
+            f"`{self.id_col}` long, _lsn long")
 
-    def tomb_broadcastable(self, include_pending: bool = False) -> bool:
-        """SIZE-GATED broadcast decision for the visibility anti-join.
-
-        Every delete path records exact tombstone id counts into the
-        manifest (`tombstone_stats[rel]["ids"]`), so the per-id max-LSN
-        side of the join is bounded by sum(ids) — known without a Spark
-        job. Broadcast only when that bound fits comfortably in an
-        executor (<= TOMB_BROADCAST_MAX_IDS rows of (long, long)); a
-        high-churn 100 TB table with billions of tombstoned ids degrades
-        to a shuffle join instead of OOMing under a forced hint. A
-        tombstone file with unknown stats makes the answer False — the
-        join is left unhinted and Catalyst/AQE pick the strategy from
-        observed sizes."""
-        tombs = list(self.manifest.tombstone_files)
+    def _tomb_ids(self, include_pending: bool = False) -> int | None:
+        """Exact tombstoned-id count summed from the manifest stats every
+        delete path records, or None when a file has no stats."""
         stats = dict(self.manifest.tombstone_stats)
         if include_pending:
-            tombs += self._pending_tombs
             stats.update(self._pending_tomb_stats)
         total = 0
-        for t in tombs:
+        for t in self._tomb_files(include_pending):
             st = stats.get(t)
             if st is None or "ids" not in st:
-                return False
+                return None
             total += int(st["ids"])
-        return total <= TOMB_BROADCAST_MAX_IDS
+        return total
+
+    def tomb_broadcastable(self, include_pending: bool = False) -> bool:
+        """SIZE GATE for broadcasting the per-id tombstone side of a join
+        (maybe_compact's merge; the kill frame adds its version rows to
+        the same bound, see _visible).
+
+        The per-id max-LSN side is bounded by the manifest's exact
+        tombstone id counts — known without a Spark job. Broadcast only
+        when that bound fits comfortably in an executor (<=
+        TOMB_BROADCAST_MAX_IDS rows of (long, long)); a high-churn 100 TB
+        table with billions of tombstoned ids degrades to a shuffle join
+        instead of OOMing under a forced hint. A tombstone file with
+        unknown stats makes the answer False — the join is left unhinted
+        and Catalyst/AQE pick the strategy from observed sizes."""
+        n = self._tomb_ids(include_pending)
+        return n is not None and n <= TOMB_BROADCAST_MAX_IDS
 
     def df(
         self, filter: FilterSet | str | None = None,
@@ -761,8 +806,8 @@ class VectorTable:
     ) -> DataFrame:
         """The live snapshot as a DataFrame: manifest file list (pruned by
         stats when a FilterSet is given; optionally restricted to an
-        explicit segment subset) → tombstone anti-join → latest-LSN upsert
-        dedup (only if duplicates are possible).
+        explicit segment subset) → one join on the snapshot's kill frame
+        (tombstones and newer versions, _visible) when either exists.
 
         include_pending=True is the read-your-writes view: committed
         segments ∪ staged-but-uncommitted segments and tombstones — the
@@ -778,127 +823,120 @@ class VectorTable:
         base = self._segment_df(segs)
         if base is None:
             return self.spark.createDataFrame([], self._empty_schema())
-        tomb = self._tombstones(include_pending=include_pending)
-
-        def tomb_filter(df):
-            # a tombstone at LSN T kills versions with LSN <= T; a
-            # re-insert AFTER the delete (row LSN > T) is visible again —
-            # MVCC delete semantics (internal/pk/mvcc.go:258, versioned
-            # tombstones tombstone.go:47-77)
-            tmax = tomb.groupBy(self.id_col).agg(F.max("_lsn").alias("_tomb_lsn"))
-            if self.tomb_broadcastable(include_pending):
-                tmax = F.broadcast(tmax)
-            return (
-                df.join(tmax, self.id_col, "left")
-                .where(F.col("_tomb_lsn").isNull() | (F.col("_lsn") > F.col("_tomb_lsn")))
-                .drop("_tomb_lsn")
-            )
-
-        if tomb is not None:
-            base = tomb_filter(base)
-        if self.manifest.meta.get("has_upserts"):
-            # the visibility UNIVERSE is always the true snapshot — never
-            # the segments= argument (r10 ADVICE: treating an explicit
-            # subset as "full" made the latest-LSN resolve run
-            # subset-locally, surfacing stale versions through
-            # segment_budget / EMA exact-scan paths). Explicit segments
-            # outside the committed list (staged handles) still join in.
-            full = list(self.manifest.segments)
-            if include_pending:
-                full = full + self._pending
-            known = {s.path for s in full}
-            full += [s for s in snapshot if s.path not in known]
-            if {s.path for s in segs} == {s.path for s in full}:
-                # scanning the whole snapshot → the winner is in view
-                w = Window.partitionBy(self.id_col).orderBy(F.col("_lsn").desc())
+        upserts = self.manifest.meta.get("has_upserts")
+        if upserts or self._tomb_files(include_pending):
+            # predicates on the ID COLUMN restrict the visibility
+            # universe soundly (any id they exclude is excluded from the
+            # final result by the same predicate below) — they push into
+            # the kill frame's scans so a point read on a 100 TB churned
+            # table row-group-prunes instead of aggregating every id
+            id_cond = None
+            if isinstance(filter, FilterSet):
+                id_filters = [f for f in filter.filters
+                              if f.key == self.id_col]
+                if id_filters:
+                    id_cond = to_condition(FilterSet(id_filters))
+            base = self._visible(base, include_pending, extra=snapshot,
+                                 id_cond=id_cond)
+            if upserts and self.manifest.meta.get("has_dup_ids", True):
+                # same-LSN duplicates (NULL ids survive the insert-time
+                # collapse) tie on the kill frame — collapse to one row.
+                # Skipped when every insert proved unique batch ids
+                # ((id, lsn) is then globally unique, so the kill join
+                # already leaves one row per id); pre-flag manifests
+                # default to True (conservative).
+                w = Window.partitionBy(self.id_col).orderBy(
+                    F.col("_lsn").desc())
                 base = (base.withColumn("_rn", F.row_number().over(w))
                         .where(F.col("_rn") == 1).drop("_rn"))
-            else:
-                # SUBSET scan (stats-pruned filter / explicit segments=):
-                # the winning VERSION of an id may live in a segment the
-                # subset dropped — a latest-LSN window over the subset
-                # would elect a STALE version (the same trap the lexical
-                # index solves with marker rows). Resolve visibility over
-                # the FULL snapshot from the persisted PK sidecars — the
-                # reference's PK-index consult on its read path
-                # (internal/pk/mvcc.go:125; persisted engine.go:2226-2262)
-                # — and keep only subset rows carrying their id's true
-                # max LSN. Pre-sidecar segments fall back to the narrow
-                # (id, _lsn) projection of their own files; either way the
-                # leg never touches non-key segment bytes. No tombstone
-                # join here: tombstones kill a per-id LSN *prefix*
-                # (`_lsn > _tomb_lsn`), so the unfiltered max equals the
-                # live max whenever any live version exists, and base is
-                # already tombstone-filtered when none does.
-                # predicates on the ID COLUMN restrict the visibility
-                # universe soundly (any id they exclude is excluded from
-                # the final result by the same predicate at the end of
-                # df()) — push them into the sidecar scan so a point-get
-                # on a 100 TB churned table row-group-prunes the vis leg
-                # instead of aggregating every id. Such one-off shapes
-                # never BUILD the cached map, but they REUSE an
-                # already-loaded broadcast-sized frame when one exists
-                # (r12, see _vis_vmax — repeated point-gets ~2x faster)
-                id_cond = None
-                if isinstance(filter, FilterSet):
-                    id_filters = [f for f in filter.filters
-                                  if f.key == self.id_col]
-                    if id_filters:
-                        id_cond = to_condition(FilterSet(id_filters))
-                vmax = self._vis_vmax(full, include_pending, id_cond)
-                if vmax is not None:
-                    if sum(s.rows for s in full) <= TOMB_BROADCAST_MAX_IDS:
-                        # row count bounds distinct ids — known from the
-                        # manifest, no probing job (tomb_broadcastable's
-                        # stance); past the bound the join stays unhinted
-                        vmax = F.broadcast(vmax)
-                    base = (
-                        base.join(vmax, self.id_col, "left")
-                        .where(F.col("_lsn") == F.col("_vis_lsn"))
-                        .drop("_vis_lsn")
-                    )
-                if self.manifest.meta.get("has_dup_ids", True):
-                    # same-LSN duplicates (one batch carrying an id twice)
-                    # tie at the max — collapse to one row, matching the
-                    # full-view window's cardinality; the window runs over
-                    # the already max-filtered subset, so it is tiny.
-                    # SKIPPED when every insert proved unique batch ids
-                    # (manifest flag; (id, lsn) is then globally unique so
-                    # the vis join already leaves one row per id) — one
-                    # exchange less per churned subset query. Pre-flag
-                    # manifests default to True (conservative).
-                    w = Window.partitionBy(self.id_col).orderBy(
-                        F.col("_lsn").desc())
-                    base = (base.withColumn("_rn", F.row_number().over(w))
-                            .where(F.col("_rn") == 1).drop("_rn"))
         cond = to_condition(filter)
         if cond is not None:
             base = base.where(cond)
-        base = base.drop("_lsn")
-        # internal layout columns stay hidden from scans; the quantized /
-        # batch search paths ask for them explicitly
+        return self._public(base, keep_codes, keep_cluster)
+
+    @staticmethod
+    def _public(df: DataFrame, keep_codes: bool = False,
+                keep_cluster: bool = False) -> DataFrame:
+        """Drop `_lsn` and the internal layout columns; the quantized /
+        batch search paths ask for the latter explicitly."""
+        df = df.drop("_lsn")
         if not keep_cluster:
-            base = base.drop(CLUSTER_COL)
-        return base if keep_codes else base.drop(
+            df = df.drop(CLUSTER_COL)
+        return df if keep_codes else df.drop(
             QCODE_COL, PQCODE_COL, BINCODE_COL, BINNORM_COL)
+
+    def _visible(self, rows: DataFrame, include_pending: bool = False,
+                 id_col: str | None = None, extra=(),
+                 id_cond=None) -> DataFrame:
+        """`rows` (one per stored row version, carrying the id as
+        `id_col` and its `_lsn`) restricted to the versions live in this
+        snapshot: ONE left join on the kill frame (_vis_vmax), keeping a
+        row iff its id has no entry or `_lsn > _kill_lsn`. Every serving
+        path — df(), the lexical, minhash, simhash and semdedup
+        artifacts — applies visibility here, the reference's one loaded
+        PK index consulted per read (internal/pk/mvcc.go:125,
+        search.go:1092-1105).
+
+        The frame covers the FULL snapshot (committed segments, staged
+        ones with include_pending, plus `extra` explicit segments outside
+        the manifest), never a subset — a subset-local resolve would
+        elect a stale version whose winner lives in a dropped segment.
+        The broadcast is size-gated: the frame has at most one row per
+        version row (upserts) plus one per tombstoned id, both known from
+        the manifest without a job; past TOMB_BROADCAST_MAX_IDS the join
+        stays unhinted and degrades to a shuffle join at scale."""
+        full = list(self.manifest.segments)
+        if include_pending:
+            full += self._pending
+        known = {s.path for s in full}
+        full += [s for s in extra if s.path not in known]
+        frame = self._vis_vmax(full, include_pending, id_cond)
+        if frame is None:
+            return rows
+        id_col = id_col or self.id_col
+        if id_col != self.id_col:
+            frame = frame.withColumnRenamed(self.id_col, id_col)
+        tomb_ids = self._tomb_ids(include_pending)
+        versions = (sum(s.rows for s in full)
+                    if self.manifest.meta.get("has_upserts") else 0)
+        if tomb_ids is not None and versions + tomb_ids <= TOMB_BROADCAST_MAX_IDS:
+            frame = F.broadcast(frame)
+        return (rows.join(frame, id_col, "left")
+                .where(F.col("_kill_lsn").isNull()
+                       | (F.col("_lsn") > F.col("_kill_lsn")))
+                .select(*rows.columns))
 
     def _vis_vmax(self, full: list[SegmentMeta], include_pending: bool,
                   id_cond=None) -> DataFrame | None:
-        """Per-id winning-LSN frame over `full` — the loaded PK index.
-        The map is IMMUTABLE per (manifest version, pending state), so it
-        is persisted once and reused across every subset query of the
-        serving session (the reference loads its PK index once and
-        consults it per read, mvcc.go:125) — repeat churned queries pay
-        an InMemoryTableScan instead of re-aggregating the sidecars.
+        """The snapshot's kill frame — the loaded PK index: (id,
+        _kill_lsn) with _kill_lsn = max(max tombstone LSN, max version
+        LSN − 1) per id, so a row version is live iff `_lsn > _kill_lsn`.
+        A tombstone at LSN T kills versions with LSN <= T (a re-insert
+        after it is visible again — MVCC delete semantics,
+        internal/pk/mvcc.go:258, tombstone.go:47-77), and a newer version
+        kills every older one. The `− 1` form stays exact when a partial
+        merge left two versions of one id in one segment. Without upserts
+        the frame is the tombstone max alone; version rows come from the
+        persisted PK sidecars (pre-sidecar segments fall back to the
+        narrow (id, _lsn) projection of their own files), so the frame
+        never touches non-key segment bytes.
+
+        The frame is IMMUTABLE per (manifest version, pending state,
+        segment set, tombstone set), so it is persisted once and reused
+        by every read of the serving session (the reference loads its PK
+        index once, mvcc.go:125) — repeat reads pay an InMemoryTableScan.
         Registry is module-level (serving code reopens tables per query),
         keyed by table path + snapshot identity, capped with oldest-first
         unpersist; release_vis_caches() frees it explicitly."""
-        covered = [s for s in full if s.pk and s.rows]
-        uncovered = [s for s in full if not s.pk and s.rows]
-        if not covered and not uncovered:
+        upserts = self.manifest.meta.get("has_upserts")
+        covered = [s for s in full if s.pk and s.rows] if upserts else []
+        uncovered = [s for s in full if not s.pk and s.rows] if upserts else []
+        tomb = self._tombstones(include_pending)
+        if not covered and not uncovered and tomb is None:
             return None
         key = (self.path, self.manifest.version, include_pending,
-               len(self._pending), tuple(sorted(s.path for s in full)))
+               len(self._pending), tuple(sorted(s.path for s in full)),
+               tuple(self._tomb_files(include_pending)))
         hit = _VIS_CACHE.get(key)
         if id_cond is None:
             cache_stats.record("pk_index", hit is not None, scope=self.path)
@@ -908,51 +946,60 @@ class VectorTable:
                 _VIS_CACHE[key] = _VIS_CACHE.pop(key)
                 return hit[0]
         else:
-            # id-restricted read (point-get shape): when the
+            # id-restricted read (point-read shape): when the
             # predicate-free frame is ALREADY loaded for this snapshot
-            # AND broadcast-sized, consult it — repeated point-gets on a
+            # AND broadcast-sized, consult it — repeated point reads on a
             # served churned table ran ~2x faster from the loaded frame
             # than rebuilding the id-restricted scan per call (measured
-            # at sf0.1, r12: 0.36-0.70s vs 0.86-1.1s incl. reopen; the
-            # reference consults its one loaded PK index for point reads
-            # too, mvcc.go:125). Past the broadcast gate the
-            # row-group-pruned id-restricted scan below stays the scale
-            # path — a point-get must never shuffle a corpus-sized
-            # frame. A COLD point-get also keeps the scan: building the
-            # O(distinct ids) frame for a one-off would be a loss.
-            # Counting stance (r12 ADVICE): a point-get counts exactly
-            # when the cache is APPLICABLE (broadcast-sized snapshot) —
-            # hit when the frame is loaded, miss when it falls through
-            # to the scan; over-gate point-gets bypass by design and
-            # count neither (symmetric — cache_stats.py docstring).
+            # at sf0.1, r12). Past the broadcast gate the row-group-
+            # pruned id-restricted scan below stays the scale path — a
+            # point read must never shuffle a corpus-sized frame. A COLD
+            # point read also keeps the scan: building the O(distinct
+            # ids) frame for a one-off would be a loss. Counting stance
+            # (r12 ADVICE): a point read counts exactly when the cache is
+            # APPLICABLE (broadcast-sized snapshot) — hit when the frame
+            # is loaded, miss when it falls through to the scan;
+            # over-gate point reads bypass by design and count neither
+            # (symmetric — cache_stats.py docstring).
             if sum(s.rows for s in full) <= TOMB_BROADCAST_MAX_IDS:
                 cache_stats.record("pk_index", hit is not None,
                                    scope=self.path)
                 if hit is not None:
                     _VIS_CACHE[key] = _VIS_CACHE.pop(key)
                     return hit[0]
-            key = None
         legs, pk_files = [], []
         if covered:
             pk_files = sorted({os.path.join(self.path, s.pk)
                                for s in covered})
-            legs.append(self.spark.read.parquet(*pk_files)
-                        .select(self.id_col, "_lsn"))
+            # a sidecar's id column has its segment's id type
+            id_types = {None if (seg := self._recorded_schema([s])) is None
+                        else seg[self.id_col].dataType.simpleString()
+                        for s in covered}
+            known = len(id_types) == 1 and None not in id_types
+            legs.append(self._read_parquet_cached(
+                pk_files, f"`{self.id_col}` {id_types.pop()}, _lsn long"
+                if known else None))
         if uncovered:
-            legs.append(self._segment_df(uncovered)
-                        .select(self.id_col, "_lsn"))
-        vis = legs[0] if len(legs) == 1 else legs[0].unionByName(legs[1])
+            legs.append(self._segment_df(uncovered))
+        legs = [leg.select(self.id_col, (F.col("_lsn") - 1).alias("_lsn"))
+                for leg in legs]
+        if tomb is not None:
+            legs.append(tomb)
+        vis = legs[0]
+        for leg in legs[1:]:
+            vis = vis.unionByName(leg)
         if id_cond is not None:
             # id-restricted one-off: the predicate pushes through the
             # union into each scan's PushedFilters (row-group pruning)
-            return (vis.where(id_cond).groupBy(self.id_col)
-                    .agg(F.max("_lsn").alias("_vis_lsn")))
-        vmax = vis.groupBy(self.id_col).agg(
-            F.max("_lsn").alias("_vis_lsn")).persist()
+            vis = vis.where(id_cond)
+        frame = vis.groupBy(self.id_col).agg(F.max("_lsn").alias("_kill_lsn"))
+        if id_cond is not None:
+            return frame
+        frame = frame.persist()
         while len(_VIS_CACHE) >= VIS_CACHE_CAP:
             _VIS_CACHE.pop(next(iter(_VIS_CACHE)))[0].unpersist()
-        _VIS_CACHE[key] = (vmax, pk_files, [s.path for s in uncovered])
-        return vmax
+        _VIS_CACHE[key] = (frame, pk_files, [s.path for s in uncovered])
+        return frame
 
     def _empty_schema(self):
         from pyspark.sql.types import LongType, StructField, StructType
@@ -962,8 +1009,28 @@ class VectorTable:
         return self.df(filter)
 
     def get(self, record_id: int) -> DataFrame:
+        """The live version of one id — a point lookup. With tombstones
+        or upserts in the snapshot, the id-filtered segment scan and the
+        id-filtered tombstone scan are unioned and the row with the
+        highest LSN wins, a tombstone first on a tie (a version survives
+        only with `_lsn > tombstone LSN`); a winning tombstone means the
+        id is deleted. One top-1 job: no kill frame, broadcast or window."""
         t0 = time.perf_counter()
-        out = self.df().where(F.col(self.id_col) == F.lit(int(record_id)))
+        cond = F.col(self.id_col) == F.lit(int(record_id))
+        base = self._segment_df(self.manifest.segments)
+        tomb = self._tombstones()
+        if base is None or (tomb is None
+                            and not self.manifest.meta.get("has_upserts")):
+            out = self.df().where(cond)
+        else:
+            rows = base.where(cond).withColumn("_dead", F.lit(False))
+            if tomb is not None:
+                rows = rows.unionByName(
+                    tomb.where(cond).withColumn("_dead", F.lit(True)),
+                    allowMissingColumns=True)
+            out = self._public(
+                rows.orderBy(F.col("_lsn").desc(), F.col("_dead").desc())
+                .limit(1).where(~F.col("_dead")).drop("_dead"))
         self._obs("on_get", time.perf_counter() - t0)
         return out
 
@@ -1363,7 +1430,6 @@ class VectorTable:
         sees a file, and the scan touches only probed files. This is the
         point of the at-rest index: probe pruning == file pruning
         (compaction.go:102-152 builds the same partitions per segment)."""
-        base = self.df(include_pending=include_pending)
         if nprobe is not None:
             if "ivf" not in self.manifest.meta:
                 raise ValueError("nprobe given but table has no IVF index; "
@@ -1380,6 +1446,8 @@ class VectorTable:
             # analog of nprobe (stats.go:643-677 early termination)
             best = [s for s, _ in self.segment_priorities(query)[:max(1, segment_budget)]]
             base = self.df(segments=best)
+        else:
+            base = self.df(include_pending=include_pending)
         return knn.search(base, query, k=k, metric=self.metric, filter=filter,
                           id_col=self.id_col, vector_col=self.vector_col, **kw)
 
@@ -1675,6 +1743,8 @@ class VectorTable:
         # model.k extra write jobs for zero read benefit — the visibility
         # leg wants the whole family anyway
         pk_rel = self._write_pk_sidecar(written, name)[0] if per else None
+        # a cluster dir holds the data columns; `_part` lives in its path
+        schema = self._record_schema(written.drop("_part").schema)
         segments = []
         for d in sorted(fs_listdir(full)):
             if not d.startswith("_part="):
@@ -1697,7 +1767,7 @@ class VectorTable:
                 }
             segments.append(SegmentMeta(
                 path=sub_rel, rows=int(r["rows"]), lsn=lsn, bytes=size,
-                stats=stats, pk=pk_rel
+                stats=stats, pk=pk_rel, schema=schema
             ))
         idx_rel = os.path.join(INDEX_DIR, f"ivf-v{version:08d}.json")
         fs_makedirs(os.path.join(self.path, INDEX_DIR))
@@ -2042,7 +2112,8 @@ class VectorTable:
             .sortWithinPartitions(self.id_col)
         )
         live.write.mode("error").parquet(full)
-        written, stats, rows = self._segment_written(full, live, stats_fin)
+        written, stats, rows, schema = self._segment_written(
+            full, live, stats_fin)
         size = fs_du(full)
         meta = dict(self.manifest.meta)
         meta["has_upserts"] = False  # dedup materialized
@@ -2064,7 +2135,7 @@ class VectorTable:
             version=version, lsn=lsn,
             next_id=self.manifest.next_id, created_at=time.time(),
             segments=[SegmentMeta(path=rel, rows=rows, lsn=lsn, bytes=size,
-                                  stats=stats, pk=pk_rel)],
+                                  stats=stats, pk=pk_rel, schema=schema)],
             tombstone_files=[], meta=meta,
         )
         save_manifest(self.path, new)
@@ -2100,7 +2171,8 @@ class VectorTable:
         merged, stats_fin = self._observe_stats(
             merged_src.sortWithinPartitions(self.id_col))
         merged.write.mode("error").parquet(full)
-        written, stats, rows = self._segment_written(full, merged, stats_fin)
+        written, stats, rows, schema = self._segment_written(
+            full, merged, stats_fin)
         size = fs_du(full)
         keep = [s for s in self.manifest.segments if s.path not in picked]
         applied = max((self._tomb_lsn(t) for t in self.manifest.tombstone_files),
@@ -2109,7 +2181,7 @@ class VectorTable:
         segments = keep + [SegmentMeta(path=rel, rows=rows, lsn=max_lsn,
                                        bytes=size, stats=stats,
                                        tomb_lsn_applied=applied, pk=pk_rel,
-                                       level=int(getattr(
+                                       schema=schema, level=int(getattr(
                                            task, "target_level", 0) or 0))]
         # tombstone GC: a tombstone T can be dropped when NO surviving
         # segment can still hold a row it hides — an original append
