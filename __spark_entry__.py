@@ -474,13 +474,12 @@ def _hybrid_rrf_filtered_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hybrid_rrf_indexed_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE one-table two-index serving path (engine.go:
-    1538-1634): the vector leg is the INDEXED search — probe-pruned
-    early-terminate over the at-rest IVF layout (engine.go:1549's
-    SearchIter never full-scans when an index exists) — the lexical leg
-    reads stored postings, RRF fuses. Bit-identical to the
-    cluster-restricted hybrid twin: search_early_terminate(k=vk,
-    nprobe=3) == exact top-vk over probed clusters (the triangle-
-    inequality bound), which is exactly the oracle's vec_where leg."""
+    1538-1634): the vector leg is the INDEXED search — search(nprobe=3)
+    over the at-rest IVF layout (engine.go:1549's SearchIter never
+    full-scans when an index exists) — the lexical leg reads stored
+    postings, RRF fuses. Bit-identical to the cluster-restricted hybrid
+    twin: search(k=vk, nprobe=3) == exact top-vk over probed clusters,
+    which is exactly the oracle's vec_where leg."""
     return hybrid.hybrid_search_at_rest(
         _hybrid_table(spark, sf_dir), _query_vector(spark, sf_dir),
         QUERY_TEXT, k=10, nprobe=3)
@@ -3182,8 +3181,8 @@ def _ann_oracles() -> dict[str, str]:
     """
 
     # indexed hybrid serving: the vector leg is the probed-cluster exact
-    # top-vk (search_early_terminate == search(nprobe=3) by the bound
-    # argument == assignment-restricted scan, the ann_ivf pattern); the
+    # top-vk (search(nprobe=3) == assignment-restricted scan, the
+    # ann_ivf pattern); the
     # lexical leg and the fuse are hybrid_rrf's own
     hybrid_rrf_indexed = hybrid.hybrid_oracle_sql(
         sq_l2_sql("c.embedding", "q.qv"), QUERY_TEXT, 10, vec_order="ASC",

@@ -409,11 +409,11 @@ COMMENTARY = {
     "hybrid_rrf_indexed_at_rest": (
         "The COMPLETE one-table two-index serving path (engine.go:"
         "1538-1634 with the 1549 stance that an indexed table never "
-        "corpus-scans): the vector leg is search_early_terminate over "
-        "the at-rest IVF layout — probe selection + SegmentPriority "
-        "skip are driver-side manifest arithmetic, the scan touches "
-        "only surviving probed cluster files (file-pruning pin in "
-        "test_lexical_at_rest), bit-identical to search(nprobe=) — the "
+        "corpus-scans): the vector leg is search(nprobe=) over the "
+        "at-rest IVF layout — probe selection is driver-side "
+        "arithmetic on the centroids, the scan touches only probed "
+        "cluster files (file-pruning pin in test_lexical_at_rest) and "
+        "the plan is built without a Spark job — the "
         "lexical leg reads stored postings, and the shared RRF fuses "
         "two k-row legs. Oracle: the cluster-restricted hybrid twin "
         "(the ann_ivf literal-centroid pattern)."

@@ -424,8 +424,8 @@ def test_manifest_records_blob_bytes(spark, tdir):
 
 def test_hybrid_indexed_at_rest_parity_and_file_pruning(spark, tdir):
     """One table, two index families, fully indexed serving: with
-    nprobe the vector leg is search_early_terminate — bit-identical to
-    search(nprobe=) composed with the shared fuse — and the fused
+    nprobe the vector leg is search(nprobe=) — bit-identical to it
+    composed with the shared fuse — and the fused
     plan's SEGMENT reads touch ONLY probed cluster files (the lexical
     leg reads postings files, never segments' text)."""
     import numpy as np
@@ -447,8 +447,8 @@ def test_hybrid_indexed_at_rest_parity_and_file_pruning(spark, tdir):
     tbl.build_lexical_index()
     qv = centers[1].tolist()
     got = hybridmod.hybrid_search_at_rest(tbl, qv, "beta tok2", k=6, nprobe=2)
-    # parity: vector leg == search(nprobe=2) (the early-terminate
-    # guarantee), fused with the stored lexical leg by shared code
+    # parity: vector leg == search(nprobe=2), fused with the stored
+    # lexical leg by shared code
     vk = max(2 * 6, 50)
     vec = tbl.search(qv, k=vk, nprobe=2)
     lexr = lex.bm25_search_at_rest(tbl, "beta tok2", k=vk)
@@ -838,9 +838,8 @@ def test_hybrid_read_your_writes_pending_parity(spark, tdir):
 
 def test_hybrid_indexed_pending_parity(spark, tdir):
     """The staged flag is honored by the indexed (nprobe) vector leg
-    too: with staged state, search_early_terminate cannot certify skips
-    from manifest stats, so the leg falls back to the plain probe set
-    over the pending-inclusive view — the fused result must equal
+    too: the leg reads the probe set over the pending-inclusive view —
+    the fused result must equal
     rrf_fuse(search(nprobe=, include_pending=True), staged-inclusive
     BM25), and staged rows inside a probed cluster must surface."""
     import numpy as np
@@ -876,8 +875,8 @@ def test_hybrid_indexed_pending_parity(spark, tdir):
         tbl, qv, "beta tok2", k=6, nprobe=2, include_pending=True))
     assert got == want and got
     assert 500 in {i for i, _ in got}
-    # committed-view default: the staged row is invisible and the leg
-    # still runs the early-terminate path (no staged fallback)
+    # committed-view default: the staged row is invisible to the
+    # probe-set leg
     com = hybridmod.hybrid_search_at_rest(tbl, qv, "beta tok2", k=6, nprobe=2)
     assert 500 not in {i for i, _ in _hpairs(com)}
     want_com = _hpairs(hybridmod.rrf_fuse(

@@ -332,3 +332,95 @@ def test_visibility_plans_hold_one_join_on_the_kill_frame(spark, churned):
         assert len(re.findall(r"\bJoin\b", plan)) == 1, (name, plan)
         assert "_kill_lsn" in plan and "Window" not in plan, name
         df.count()
+
+
+# ---------------------------------------------------------------------
+# query_serve reads: building the plan runs no Spark job, and the read
+# itself is one job (a fresh BM25 text also pays its docFreq lookup).
+
+
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """A clean table with the IVF layout, SQ8 codes and a lexical index."""
+    from vecgo_spark.plans import table as tmod
+    from vecgo_spark.plans.table import VectorTable
+
+    t = VectorTable.create(
+        spark, str(tmp_path_factory.mktemp("served") / "t"), dim=2)
+    t.insert(_docs(spark, range(1, 61), 0))
+    t.commit()
+    t.compact(cluster_by=3, quantize="sq8")
+    t.build_lexical_index()
+    assert not t.manifest.tombstone_files
+    assert not t.manifest.meta.get("has_upserts")
+    yield t
+    tmod.release_vis_caches()
+
+
+def test_quantized_refine_plans_without_a_job_and_reads_in_one(spark, served):
+    t = served
+    t.search_quantized([9.0, 0.0], k=5, nprobe=2, refine=20).collect()
+    frame, n_call = _jobs(spark, lambda: t.search_quantized(
+        [21.0, 0.0], k=5, nprobe=2, refine=20))
+    rows, n_collect = _jobs(spark, frame.collect)
+    assert (n_call, n_collect) == (0, 1)
+    assert len(rows) == 5
+
+
+def test_hybrid_on_cached_text_plans_without_a_job_and_reads_in_one(
+        spark, served):
+    t = served
+    t.hybrid_search([9.0, 0.0], "beta tok2", k=5, nprobe=2).collect()
+    frame, n_call = _jobs(spark, lambda: t.hybrid_search(
+        [33.0, 0.0], "beta tok2", k=5, nprobe=2))
+    rows, n_collect = _jobs(spark, frame.collect)
+    assert (n_call, n_collect) == (0, 1)
+    assert len(rows) == 5
+
+
+def test_fresh_bm25_docfreq_lookup_is_one_narrow_job(spark, served,
+                                                     monkeypatch):
+    """The clean-snapshot docFreq lookup is the only job of a fresh-text
+    call, and it scans the df sidecars without a shuffle."""
+    DataFrame = type(spark.range(1))
+    plans = []
+    collect = DataFrame.collect
+
+    def traced(df):
+        rows = collect(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    t = served
+    t.bm25_search("alpha end1", k=5).collect()
+    monkeypatch.setattr(DataFrame, "collect", traced)
+    frame, n_call = _jobs(spark, lambda: t.bm25_search("tok4 end3", k=5))
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    assert n_call == 1 and len(plans) == 1
+    assert "Exchange" not in plans[0] and "QueryStage" not in plans[0]
+    assert frame.collect()
+
+
+def test_search_plan_build_stays_under_200_py4j_round_trips(spark, served):
+    """Building a filtered kNN plan crosses py4j ~60 times. Call-site
+    capture on every DataFrame/functions call adds ~4 round trips each
+    (~280 in all, with the distance expression built from lambdas)."""
+    from vecgo_spark.filters import FilterSet
+
+    t = served
+    client = spark.sparkContext._gateway._gateway_client
+    fs = FilterSet().gte("id", 10)
+    t.search([5.0, 0.0], k=10, filter=fs)
+    calls = []
+    send = client.send_command
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return send(*a, **kw)
+
+    client.send_command = counted
+    try:
+        t.search([7.0, 0.0], k=10, filter=fs)
+    finally:
+        del client.send_command
+    assert 0 < len(calls) <= 200, len(calls)

@@ -420,3 +420,54 @@ def test_segment_budget_priority_order_recall(spark, tmp_path):
     fr = res(t.search_quantized(q, k=3, nprobe=n_segs, refine=20,
                                 segment_budget=1))
     assert fr == res(t.search_quantized(q, k=3, nprobe=n_segs, refine=20))
+
+
+@pytest.fixture(scope="module", params=["sq", "pq"])
+def churned_codes(spark, tmp_path_factory, request):
+    """An IVF + quantized table after a commit with upserts, tombstones
+    and one NULL-vector row (NULL codes, NULL coarse score)."""
+    from vecgo_spark.quantization import pq as pqz
+
+    rng = np.random.default_rng(31)
+    schema = "id long, vector array<double>"
+    t = VectorTable.create(
+        spark, str(tmp_path_factory.mktemp(f"refine_{request.param}") / "t"),
+        dim=DIM, metric="l2")
+    t.insert(spark.createDataFrame(
+        [(i, rng.standard_normal(DIM).tolist()) for i in range(120)], schema))
+    t.commit()
+    quantize = "sq8" if request.param == "sq" else pqz.train_pq(
+        t.df(), "vector", m=4, k=16, iters=5, order_col="id")
+    t.compact(cluster_by=4, quantize=quantize)
+    t.insert(spark.createDataFrame(
+        [(i, rng.standard_normal(DIM).tolist()) for i in (3, 17, 40, 200)]
+        + [(201, None)], schema))
+    t.delete([5, 17, 66])
+    t.commit()
+    assert t.manifest.meta["has_upserts"] and t.manifest.tombstone_files
+    return request.param, t
+
+
+@pytest.mark.parametrize("nprobe", [None, 2])
+def test_refine_equals_hand_composed_rerank(churned_codes, nprobe):
+    """search_quantized(refine=R) returns exactly the rows of reranking
+    its own coarse top-R against the live snapshot by hand — scores,
+    order, and where a NULL-vector candidate lands (the coarse order puts
+    its NULL estimate last; the exact order is knn's (score, id))."""
+    from vecgo_spark.operators import knn
+
+    codes, t = churned_codes
+    rng = np.random.default_rng(37)
+    for q, refine in ((rng.standard_normal(DIM).tolist(), 25),
+                      ([0.0] * DIM, 500)):
+        coarse = t.search_quantized(q, k=refine, nprobe=nprobe, codes=codes)
+        want = knn.rerank(coarse, t.df(), q, k=10, metric=t.metric,
+                          id_col=t.id_col, vector_col=t.vector_col).collect()
+        got = t.search_quantized(q, k=10, nprobe=nprobe, refine=refine,
+                                 codes=codes).collect()
+        assert [(r["id"], r["score"]) for r in got] == [
+            (r["id"], r["score"]) for r in want]
+        ids = [r["id"] for r in got]
+        assert len(ids) == 10 and not {5, 17, 66} & set(ids)
+        if nprobe is None and refine == 500:
+            assert 201 in {r["id"] for r in coarse.collect()}

@@ -23,6 +23,7 @@ and oracle-comparable against DuckDB.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -48,16 +49,18 @@ def double_array_expr(vals: Sequence[float]) -> Column:
     costs 1-2.5 s of pure driver chatter PER QUERY BUILD, measured r11
     on the bloom bit vector); F.expr hands Catalyst one string to parse
     JVM-side in ~20 ms. Identical literal in the optimized plan."""
-    return F.expr("array(" + ",".join(_dlit_sql(float(x)) for x in vals) + ")")
+    return F.expr(_darray_sql(vals))
+
+
+def _darray_sql(vals: Sequence[float]) -> str:
+    return "array(" + ",".join(_dlit_sql(float(x)) for x in vals) + ")"
 
 
 def _dmatrix_sql(rows) -> str:
     """The ARRAY<ARRAY<DOUBLE>> literal as raw SQL text — shared by
     double_matrix_expr and callers that splice the matrix into a larger
     single-parse SQL string (ivf._cents_sql)."""
-    return ("array(" + ",".join(
-        "array(" + ",".join(_dlit_sql(float(x)) for x in row) + ")"
-        for row in rows) + ")")
+    return "array(" + ",".join(_darray_sql(row) for row in rows) + ")"
 
 
 def double_matrix_expr(rows) -> Column:
@@ -80,24 +83,44 @@ def _as_double_array(v: Column | str | Sequence[float]) -> Column:
     return col.cast("array<double>")
 
 
+_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _array_sql(v: Column | str | Sequence[float]) -> str | None:
+    """An operand as ARRAY<DOUBLE> SQL text — a literal vector, or a
+    plain column name cast as _as_double_array casts it; None for a
+    Column."""
+    if isinstance(v, (list, tuple)):
+        return _darray_sql(v)
+    if isinstance(v, str) and _NAME.fullmatch(v):
+        return f"CAST(`{v}` AS ARRAY<DOUBLE>)"
+    return None
+
+
+def _pairwise_sum(a, b, term_sql: str, term) -> Column:
+    """Σ term(x, y) over zip_with(a, b), folded left to right from 0.0.
+    Literal and named operands go to the JVM as ONE parsed SQL string:
+    the Column builder spends ~17 ms of py4j round trips on the lambdas
+    of one 128-d expression, the parse under 1 ms, and both give the
+    same expression. A Column operand takes the Column builder."""
+    sa, sb = _array_sql(a), _array_sql(b)
+    if sa is not None and sb is not None:
+        return F.expr(f"aggregate(zip_with({sa}, {sb}, (x, y) -> {term_sql}),"
+                      " 0.0D, (acc, t) -> acc + t)")
+    a, b = _as_double_array(a), _as_double_array(b)
+    return F.aggregate(F.zip_with(a, b, term), F.lit(0.0),
+                       lambda acc, x: acc + x)
+
+
 def sq_l2(a: Column | str | Sequence[float], b: Column | str | Sequence[float]) -> Column:
     """Squared Euclidean distance (NOT rooted — distance/distance.go:20)."""
-    a, b = _as_double_array(a), _as_double_array(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _pairwise_sum(a, b, "(x - y) * (x - y)",
+                         lambda x, y: (x - y) * (x - y))
 
 
 def dot(a: Column | str | Sequence[float], b: Column | str | Sequence[float]) -> Column:
     """Inner product (distance/distance.go:13-15)."""
-    a, b = _as_double_array(a), _as_double_array(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _pairwise_sum(a, b, "x * y", lambda x, y: x * y)
 
 
 def l2_norm(a: Column | str | Sequence[float]) -> Column:

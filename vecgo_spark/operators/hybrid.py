@@ -152,11 +152,13 @@ def hybrid_search_at_rest(
 
     Vector leg economics (engine.go:1549: SearchIter rides the table's
     INDEXED path, never a corpus scan): with `nprobe` and the at-rest
-    IVF layout, the leg is `search_early_terminate` — probe pruning ==
-    file pruning, plus the SegmentPriority stop rule — bit-identical to
-    `search(nprobe=)` over the probed clusters while opening only the
-    probed (and not provably-losing) segment files. Without `nprobe`
-    the leg stays the exact full scan (SURVEY §7.1's primary path).
+    IVF layout, the leg is `search(nprobe=)` — probe pruning == file
+    pruning, the same one-scan probe set an IVF read opens. The leg
+    runs no job while the plan is built: the SegmentPriority stop rule
+    of `search_early_terminate` would skip some probed segments, but it
+    needs the nearest segment's top-k collected first, and that job
+    costs more than the files it saves. Without `nprobe` the leg stays
+    the exact full scan (SURVEY §7.1's primary path).
     Either way the fuse is shared code, so results are bit-identical to
     `hybrid_search` over the equivalent (id, vector, text) collection
     restricted to the same cluster set."""
@@ -164,9 +166,8 @@ def hybrid_search_at_rest(
 
     vector_k = max(2 * k, 50)  # engine.go:1545-1548
     if nprobe is not None:
-        vec = tbl.search_early_terminate(
-            query_vector, k=vector_k, nprobe=nprobe, filter=filter,
-            include_pending=include_pending)
+        vec = tbl.search(query_vector, k=vector_k, nprobe=nprobe,
+                         filter=filter, include_pending=include_pending)
     else:
         vec = knn.search(
             tbl.df(include_pending=include_pending), query_vector,

@@ -220,13 +220,17 @@ def rerank(
     """Exact re-scoring of an approximate candidate set (the refine pass,
     internal/engine/search.go:913-965 + WithRefineFactor vecgo.go:239-241).
 
-    ``candidates`` holds ids (k·refine_factor of them — BOUNDED, the one
-    collect the architecture allows). Collecting the id list once and
-    pushing it into the scan as an IN filter beats a broadcast join two
-    ways: the parquet reader row-group-prunes on the ids, and the
-    (possibly expensive — e.g. a quantized-scoring plan with a pandas UDF)
-    candidate lineage is evaluated exactly once instead of once per
-    downstream consumer.
+    ``candidates`` holds ids only (k·refine_factor of them — BOUNDED),
+    e.g. a graph blob probe's, which carry no vectors. For such a
+    source the id collect is the one collect the architecture allows.
+    Collecting the id list once and pushing it into the scan as an IN
+    filter beats a broadcast join two ways: the parquet reader
+    row-group-prunes on the ids, and the (possibly expensive — e.g. a
+    quantized-scoring plan with a pandas UDF) candidate lineage is
+    evaluated exactly once instead of once per downstream consumer. A
+    candidate frame that carries its vectors needs neither: the
+    quantized refine re-scores it in the same plan
+    (VectorTable.search_quantized).
     """
     from vecgo_spark.operators.util import isin_longs
 

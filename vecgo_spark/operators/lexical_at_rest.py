@@ -471,14 +471,18 @@ def _stored_term_df(tbl, info, terms: list[str],
     if not all(fs_exists(os.path.join(tbl.path, r)) for r in rels):
         return None
     live = {s.path for s in man.segments}
+    # one narrow scan of ≤ |terms| × |segments| rows summed here: a
+    # groupBy would add a shuffle, and under AQE a job of its own
     rows = (
-        tbl._read_parquet_cached([os.path.join(tbl.path, r) for r in rels])
+        tbl._read_parquet_cached([os.path.join(tbl.path, r) for r in rels],
+                                 "_seg string, term string, df long")
         .where(F.col("term").isin(terms) & F.col("_seg").isin(sorted(live)))
-        .groupBy("term").agg(F.sum("df").alias("df"))
+        .select("term", "df")
         .collect()
     )
     out = {t: 0 for t in terms}
-    out.update({r["term"]: int(r["df"]) for r in rows})
+    for r in rows:
+        out[r["term"]] += r["df"]
     return out
 
 

@@ -1323,9 +1323,9 @@ class VectorTable:
         index when one exists (the persistent lexical.Index path); the
         metadata filter applies to the vector leg only (engine.go:1555).
         With `nprobe` (requires the at-rest IVF layout + a covering
-        lexical index) the vector leg is probe-pruned early-terminate
-        search — the reference's indexed serving economics, engine.go:
-        1549: SearchIter never full-scans when an index exists.
+        lexical index) the vector leg is the probe-pruned
+        search(nprobe=) — the reference's indexed serving economics,
+        engine.go:1549: SearchIter never full-scans when an index exists.
         include_pending=True fuses BOTH legs over the writer's
         staged-inclusive snapshot — the reference's one-snapshot hybrid
         (both legs see the memtable, engine.go:833-921)."""
@@ -1975,7 +1975,11 @@ class VectorTable:
         segments score stored codes, flat/segment.go:447-753). Optional
         nprobe rides the materialized IVF layout (probe == file pruning);
         optional refine reranks the coarse ADC top-`refine` against the
-        full-precision vectors, the WithRefineFactor two-stage pipeline.
+        full-precision vectors, the WithRefineFactor two-stage pipeline:
+        the coarse rows carry their vectors, so the exact score and the
+        final (score, id) top-k run on that bounded frame in the same
+        plan — one job, no id collect and no second snapshot scan (the
+        reference's in-process refine, search.go:913-965).
         codes picks the stored family ("sq" scalar / "pq" product / "bq"
         Hamming / "rabitq" estimator — the last two serve the packed sign
         words the reference keeps in flat segments, binary.go:23-260,
@@ -2065,15 +2069,21 @@ class VectorTable:
         # check) carry NULL codes → NULL ADC scores, which must never
         # occupy the top-k ahead of real matches (Spark default is
         # NULLS FIRST on asc) — mirrors the cosine null guard in knn.py
+        keep = [self.id_col] + ([] if refine is None else [self.vector_col])
         coarse = (
-            base.select(self.id_col, score.alias("score"))
+            base.select(*keep, score.alias("score"))
             .orderBy(F.col("score").asc_nulls_last(), F.col(self.id_col).asc())
             .limit(refine or k)
         )
         if refine is None:
             return coarse
-        return knnmod.rerank(coarse, self.df(), q, k=k, metric=self.metric,
-                             id_col=self.id_col, vector_col=self.vector_col)
+        # the refine stage re-scores the bounded coarse frame's own
+        # vectors in the same plan: rerank's exact score and (score, id)
+        # order, without its id collect and second snapshot scan
+        exact = coarse.select(
+            self.id_col,
+            knnmod.score_expr(self.metric, self.vector_col, q).alias("score"))
+        return knnmod._ordered(exact, self.metric, self.id_col).limit(k)
 
     def _with_codes(self, df: DataFrame, sq_params, pq_books, bin_params=None) -> DataFrame:
         if sq_params is not None:

@@ -255,10 +255,17 @@ def encode(pq: PQCodebooks, df: DataFrame, vector_col: str, codes_col: str = "pq
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _enc(vs: pd.Series) -> pd.Series:
-        x = np.array(vs.tolist(), dtype=np.float64)
-        if rot is not None:
-            x = _rotate_np(x, rot)
-        return pd.Series([c.tolist() for c in _encode_np(x, books)])
+        # a NULL vector (the insert dim check lets it through) gets NULL
+        # codes, as the scalar encoder gives it
+        live = vs.notna().to_numpy()
+        out = [None] * len(vs)
+        if live.any():
+            x = np.array(vs[live].tolist(), dtype=np.float64)
+            if rot is not None:
+                x = _rotate_np(x, rot)
+            for i, c in zip(np.flatnonzero(live), _encode_np(x, books)):
+                out[i] = c.tolist()
+        return pd.Series(out, dtype=object)
 
     return df.withColumn(codes_col, _enc(F.col(vector_col)))
 

@@ -29,5 +29,7 @@ def get_spark(app_name: str = "vecgo_spark", shuffle_partitions: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # call-site capture costs ~4 py4j round trips per DataFrame/F call
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
