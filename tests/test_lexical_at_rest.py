@@ -348,6 +348,55 @@ def test_clean_residency_gate_streams_oversized_candidates(spark, tdir,
     lex.release_caches()
 
 
+def test_resident_docfreq_is_one_map_per_snapshot(spark, tdir):
+    """A clean snapshot's docFreq comes from a map loaded once from the
+    df sidecars (their row count recorded at build and at refresh). The
+    map is keyed by the snapshot: its committed and include_pending
+    views share it, an older snapshot keeps its own, and
+    release_caches() drops them."""
+    def maps():
+        return {k[1]: v[2] for k, v in lex._COUNTS_CACHE.items()
+                if k[0] == tbl.path and v[2] is not None}
+
+    tbl = VectorTable.create(spark, tdir, dim=None)
+    tbl.insert(_docs(spark, range(1, 21)))
+    tbl.commit()
+    tbl.build_lexical_index()
+    v1 = tbl.manifest.version
+    assert _res(lex.bm25_search_at_rest(tbl, Q, k=10)) == _fresh(tbl, Q)
+    first = maps()
+    assert list(first) == [v1]
+    assert _res(lex.bm25_search_at_rest(tbl, "alpha end3", k=10,
+                                        include_pending=True)) == \
+        _fresh(tbl, "alpha end3")
+    assert maps() == first and maps()[v1] is first[v1]
+    tbl.insert(_docs(spark, range(21, 31)))
+    tbl.commit()
+    tbl.refresh_lexical_index()
+    info = tbl.manifest.meta["lexical"]
+    assert set(info["df_rows"]) == set(info["paths"])
+    assert _res(lex.bm25_search_at_rest(tbl, Q, k=10)) == _fresh(tbl, Q)
+    held = maps()
+    assert sorted(held) == [v1, tbl.manifest.version]
+    assert held[tbl.manifest.version]["beta"] == 30
+    lex.release_caches(tbl.path)
+    assert not maps()
+
+
+def test_resident_docfreq_maps_share_one_term_budget(monkeypatch):
+    """The maps of all tables hold at most _RESIDENT_MAX_DF_TERMS terms
+    together; past it the oldest map goes first. Entries without a map
+    (churned snapshots' N/Σdl) stay."""
+    monkeypatch.setattr(lex, "_COUNTS_CACHE", {})
+    monkeypatch.setattr(lex, "_RESIDENT_MAX_DF_TERMS", 5)
+    lex._memo_counts(("a", 1), (3, 9, {"x": 1, "y": 1, "z": 1}))
+    lex._memo_counts(("churned", 1), (2, 4, None))
+    lex._memo_counts(("b", 1), (2, 6, {"x": 1, "y": 2}))
+    assert list(lex._COUNTS_CACHE) == [("a", 1), ("churned", 1), ("b", 1)]
+    lex._memo_counts(("a", 2), (4, 9, {"w": 1, "x": 1, "y": 1, "z": 1}))
+    assert list(lex._COUNTS_CACHE) == [("churned", 1), ("a", 2)]
+
+
 def test_df_sidecar_written_folded_and_vacuumed(spark, tdir):
     """The df sidecar rides every build/refresh/fold: Σ_seg stored df ==
     true per-term docFreq on clean snapshots across refreshes and the
@@ -422,12 +471,13 @@ def test_manifest_records_blob_bytes(spark, tdir):
     assert tbl.stats()["index_bytes"] == sum(info["bytes"].values())
 
 
-def test_hybrid_indexed_at_rest_parity_and_file_pruning(spark, tdir):
+def test_hybrid_indexed_at_rest_parity_and_file_pruning(spark, tdir,
+                                                       monkeypatch):
     """One table, two index families, fully indexed serving: with
     nprobe the vector leg is search(nprobe=) — bit-identical to it
-    composed with the shared fuse — and the fused
-    plan's SEGMENT reads touch ONLY probed cluster files (the lexical
-    leg reads postings files, never segments' text)."""
+    composed with the shared fuse — and the fuse's one collect (both
+    legs) reads SEGMENT files of ONLY probed clusters (the lexical leg
+    reads postings files, never segments' text)."""
     import numpy as np
 
     from vecgo_spark.operators import hybrid as hybridmod
@@ -446,7 +496,12 @@ def test_hybrid_indexed_at_rest_parity_and_file_pruning(spark, tdir):
     tbl.compact(cluster_by=4)
     tbl.build_lexical_index()
     qv = centers[1].tolist()
+    DataFrame = type(spark.range(1))
+    collect, read = DataFrame.collect, []
+    monkeypatch.setattr(DataFrame, "collect",
+                        lambda df: read.extend(df.inputFiles()) or collect(df))
     got = hybridmod.hybrid_search_at_rest(tbl, qv, "beta tok2", k=6, nprobe=2)
+    monkeypatch.undo()
     # parity: vector leg == search(nprobe=2), fused with the stored
     # lexical leg by shared code
     vk = max(2 * 6, 50)
@@ -456,10 +511,10 @@ def test_hybrid_indexed_at_rest_parity_and_file_pruning(spark, tdir):
                               vec_ascending=knn.metric_ascending("l2"))
     pairs = [(r["id"], r["rrf_score"]) for r in got.collect()]
     assert pairs == [(r["id"], r["rrf_score"]) for r in want.collect()] and pairs
-    # file pruning: segment files in the fused plan stay within the
+    # file pruning: segment files the fuse reads stay within the
     # probed clusters (≤2 of 4 cluster dirs); postings files are the
     # lexical leg's own
-    seg_files = [f for f in got.inputFiles() if "_part=" in f]
+    seg_files = [f for f in read if "_part=" in f]
     touched = {f.split("_part=")[1].split("/")[0] for f in seg_files}
     assert seg_files and len(touched) <= 2
     all_parts = {f.split("_part=")[1].split("/")[0]

@@ -336,7 +336,9 @@ def test_visibility_plans_hold_one_join_on_the_kill_frame(spark, churned):
 
 # ---------------------------------------------------------------------
 # query_serve reads: building the plan runs no Spark job, and the read
-# itself is one job (a fresh BM25 text also pays its docFreq lookup).
+# itself is one job — except the hybrid, whose fuse job runs in its call
+# (the collect of its local result runs none), and a fresh BM25 text,
+# which also materialises its persisted candidate frame.
 
 
 @pytest.fixture(scope="module")
@@ -367,21 +369,8 @@ def test_quantized_refine_plans_without_a_job_and_reads_in_one(spark, served):
     assert len(rows) == 5
 
 
-def test_hybrid_on_cached_text_plans_without_a_job_and_reads_in_one(
-        spark, served):
-    t = served
-    t.hybrid_search([9.0, 0.0], "beta tok2", k=5, nprobe=2).collect()
-    frame, n_call = _jobs(spark, lambda: t.hybrid_search(
-        [33.0, 0.0], "beta tok2", k=5, nprobe=2))
-    rows, n_collect = _jobs(spark, frame.collect)
-    assert (n_call, n_collect) == (0, 1)
-    assert len(rows) == 5
-
-
-def test_fresh_bm25_docfreq_lookup_is_one_narrow_job(spark, served,
-                                                     monkeypatch):
-    """The clean-snapshot docFreq lookup is the only job of a fresh-text
-    call, and it scans the df sidecars without a shuffle."""
+def _collect_plans(spark, monkeypatch):
+    """Executed plan of every DataFrame.collect run from now on."""
     DataFrame = type(spark.range(1))
     plans = []
     collect = DataFrame.collect
@@ -391,14 +380,82 @@ def test_fresh_bm25_docfreq_lookup_is_one_narrow_job(spark, served,
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return rows
 
+    monkeypatch.setattr(DataFrame, "collect", traced)
+    return plans
+
+
+def test_hybrid_on_cached_text_runs_one_job_without_window_or_join(
+        spark, served, monkeypatch):
+    """The fuse collects both bounded legs in one job and ranks them
+    in-process: the call runs that job, the returned local relation's
+    collect runs none, and no Window or SortMergeJoin is planned."""
+    t = served
+    t.hybrid_search([9.0, 0.0], "beta tok2", k=5, nprobe=2).collect()
+    plans = _collect_plans(spark, monkeypatch)
+    frame, n_call = _jobs(spark, lambda: t.hybrid_search(
+        [33.0, 0.0], "beta tok2", k=5, nprobe=2))
+    rows, n_collect = _jobs(spark, frame.collect)
+    assert n_call + n_collect == 1, (n_call, n_collect)
+    assert len(rows) == 5 and len(plans) == 2
+    assert "LocalTableScan" in plans[-1]
+    for plan in plans:
+        assert "Window" not in plan and "SortMergeJoin" not in plan
+
+
+def test_fresh_bm25_runs_no_job_in_its_call_and_at_most_two(spark, served,
+                                                           monkeypatch):
+    """On a clean snapshot a fresh text takes its docFreq from the
+    snapshot's resident map (loaded by the first query), so the call runs
+    no job; the candidate aggregate reads one partition, so no Exchange
+    and no AQE shuffle-stage job: at most the cache stage and the top-k."""
     t = served
     t.bm25_search("alpha end1", k=5).collect()
-    monkeypatch.setattr(DataFrame, "collect", traced)
+    plans = _collect_plans(spark, monkeypatch)
     frame, n_call = _jobs(spark, lambda: t.bm25_search("tok4 end3", k=5))
-    monkeypatch.setattr(DataFrame, "collect", collect)
+    assert n_call == 0 and not plans
+    rows, n_collect = _jobs(spark, frame.collect)
+    assert n_collect <= 2 and rows
+    assert "Exchange" not in plans[0]
+
+
+def test_fresh_bm25_docfreq_lookup_is_one_narrow_job(spark, served,
+                                                     monkeypatch):
+    """Without a recorded sidecar row count (dirs written before it was
+    recorded, or sidecars past the residency bound) the clean-snapshot
+    docFreq lookup is the only job of a fresh-text call, and it scans
+    the df sidecars without a shuffle."""
+    t = served
+    t.bm25_search("alpha end1", k=5).collect()
+    monkeypatch.setitem(t.manifest.meta["lexical"], "df_rows", {})
+    plans = _collect_plans(spark, monkeypatch)
+    frame, n_call = _jobs(spark, lambda: t.bm25_search("gamma tok0 end6", k=5))
     assert n_call == 1 and len(plans) == 1
     assert "Exchange" not in plans[0] and "QueryStage" not in plans[0]
     assert frame.collect()
+
+
+def _round_trips(spark, build) -> int:
+    """py4j round trips of one warm `build()` (counted by wrapping the
+    live gateway client's send_command). Object deletes are not counted:
+    py4j's finalizer thread sends them through the same client whenever
+    Python frees earlier proxies, so their number depends on what ran
+    before, not on the build."""
+    client = spark.sparkContext._gateway._gateway_client
+    build()
+    calls = []
+    send = client.send_command
+
+    def counted(command, *a, **kw):
+        if not command.startswith("m\nd\n"):
+            calls.append(1)
+        return send(command, *a, **kw)
+
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        del client.send_command
+    return len(calls)
 
 
 def test_search_plan_build_stays_under_200_py4j_round_trips(spark, served):
@@ -408,19 +465,25 @@ def test_search_plan_build_stays_under_200_py4j_round_trips(spark, served):
     from vecgo_spark.filters import FilterSet
 
     t = served
-    client = spark.sparkContext._gateway._gateway_client
     fs = FilterSet().gte("id", 10)
-    t.search([5.0, 0.0], k=10, filter=fs)
-    calls = []
-    send = client.send_command
+    n = _round_trips(spark, lambda: t.search([7.0, 0.0], k=10, filter=fs))
+    assert 0 < n <= 200, n
 
-    def counted(*a, **kw):
-        calls.append(1)
-        return send(*a, **kw)
 
-    client.send_command = counted
-    try:
-        t.search([7.0, 0.0], k=10, filter=fs)
-    finally:
-        del client.send_command
-    assert 0 < len(calls) <= 200, len(calls)
+def test_read_plan_builds_stay_under_their_py4j_ceilings(spark, served):
+    """The quantized refine, a fresh-text BM25 and a hybrid build their
+    expressions as one SQL string each (the ADC decode, the candidate
+    aggregate, the score) — measured 95, 101 and 132 round trips; the
+    lambda- and Column-built forms took 198, 440 and 411."""
+    t = served
+    texts = iter(f"tok{i % 5} end{i % 7} w{i}" for i in range(10))
+    ceilings = {
+        "sq8_refine": (lambda: t.search_quantized(
+            [21.0, 0.0], k=5, nprobe=2, refine=20), 130),
+        "bm25": (lambda: t.bm25_search(next(texts), k=5), 140),
+        "hybrid": (lambda: t.hybrid_search(
+            [9.0, 0.0], "beta tok2", k=5, nprobe=2), 180),
+    }
+    for name, (build, ceiling) in ceilings.items():
+        n = _round_trips(spark, build)
+        assert 0 < n <= ceiling, (name, n)

@@ -471,3 +471,36 @@ def test_refine_equals_hand_composed_rerank(churned_codes, nprobe):
         assert len(ids) == 10 and not {5, 17, 66} & set(ids)
         if nprobe is None and refine == 500:
             assert 201 in {r["id"] for r in coarse.collect()}
+
+
+@pytest.mark.parametrize("nprobe", [None, 4])
+def test_null_vector_row_never_ranks_first(spark, tmp_path, nprobe):
+    """A NULL-vector row (the insert dim check admits it) scores NULL; an
+    ascending metric must sort it last, not at rank 0 ahead of every real
+    match — in knn.search, knn.rerank, the quantized refine and the
+    hybrid vector leg's ranks alike."""
+    from vecgo_spark.operators import knn
+
+    rng = np.random.default_rng(41)
+    t = VectorTable.create(spark, str(tmp_path / "t"), dim=DIM, metric="l2")
+    schema = "id long, text string, vector array<double>"
+    t.insert(spark.createDataFrame(
+        [(i, "alpha", rng.standard_normal(DIM).tolist()) for i in range(120)], schema))
+    t.commit()
+    t.compact(cluster_by=4, quantize="sq8")
+    t.insert(spark.createDataFrame([(201, "omega", None)], schema))
+    t.commit()
+    t.build_lexical_index()
+    q = [0.0] * DIM
+    firsts = {
+        "search": t.search(q, k=3, nprobe=nprobe),
+        "rerank": knn.rerank(t.df().select("id"), t.df(), q, k=3),
+        "refine": t.search_quantized(q, k=3, nprobe=nprobe, refine=500),
+        # no lexical match: the fused order is the vector leg's rank order
+        "hybrid": t.hybrid_search(q, "nomatch", k=3, nprobe=nprobe),
+    }
+    for name, df in firsts.items():
+        ids = [r["id"] for r in df.collect()]
+        assert len(ids) == 3 and 201 not in ids, (name, ids)
+    want = [r["id"] for r in firsts["search"].collect()]
+    assert [r["id"] for r in firsts["hybrid"].collect()] == want

@@ -25,6 +25,7 @@ SUM() would be engine/partition-order dependent and break oracle parity).
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -141,8 +142,6 @@ def bm25_score(
     left-to-right expression — the same order as the oracle's term-sorted
     list fold, so the doubles match bit-for-bit.
     """
-    import math
-
     spark = docs.sparkSession
     qterms: dict[str, int] = {}
     for t in tokenize_py(query_text):
@@ -189,14 +188,22 @@ def bm25_score(
         # (bm25.go Add/Search on empty index); avoids K1·B/avg_dl = x/0
         bm25_release()
         return spark.createDataFrame([], "id long, score double")
-    n = float(n_docs)
+    dfs = [int(row[f"df_{i}"] or 0) for i in range(len(terms))]
+    score = score_sql(terms, qterms, dfs, n_docs, avg_dl)
+    return (per.selectExpr("id", f"({score}) AS score")
+            .where(F.col("score") > 0.0))
 
-    # same left-fold as the Column form: ((0.0 + c_0) + c_1) + ... with
-    # every double literal in IEEE shortest-round-trip form (_dlit_sql),
-    # so the per-row sum is the identical op sequence bit-for-bit
+
+def score_sql(terms: list[str], qterms: dict[str, int], dfs: list[int],
+              n_docs: int, avg_dl: float) -> str:
+    """The BM25 score of a row carrying `dl` and `tf_<i>` per sorted query
+    term (docFreq `dfs[i]`) as ONE SQL string: ((0.0 + c_0) + c_1) + ...,
+    every double literal in IEEE shortest-round-trip form (_dlit_sql), so
+    the per-row sum is the same op sequence, bit for bit, wherever it is
+    built."""
+    n = float(n_docs)
     parts = []
-    for i, t in enumerate(terms):
-        df_t = int(row[f"df_{i}"] or 0)
+    for i, (t, df_t) in enumerate(zip(terms, dfs)):
         idf = math.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5))
         contrib = (
             f"{_dlit_sql(float(qterms[t]))} * ({_dlit_sql(idf)} * "
@@ -205,10 +212,7 @@ def bm25_score(
             f"{_dlit_sql(K1 * B / avg_dl)} * CAST(dl AS DOUBLE))))"
         )
         parts.append(f"CASE WHEN tf_{i} > 0 THEN {contrib} ELSE 0.0D END")
-    score_sql = " + ".join(["0.0D", *parts])
-
-    return (per.selectExpr("id", f"({score_sql}) AS score")
-            .where(F.col("score") > 0.0))
+    return " + ".join(["0.0D", *parts])
 
 
 def bm25_search(

@@ -11,23 +11,56 @@ Rank determinism (SURVEY §7.3): ranks come from (score, id) ordering in
 each list — the same tiebreak as every other operator — so the RRF sums
 are reproducible. Final tiebreak on equal fused score: id asc.
 
-Plan shape: two bounded top-vectorK DataFrames (each already ≤ ~2k rows
-regardless of corpus size) → full outer join on id → arithmetic. The
-expensive parts are the underlying searches; fusion itself is O(k).
+Plan shape: the two bounded top-vectorK legs (each ≤ ~2k rows
+regardless of corpus size) are collected in ONE job as a tagged union;
+ranking and the fuse run in-process on the driver — the reference's
+in-memory loop (engine.go:1560-1602) — and the top-k comes back as a
+local relation (SQL VALUES), whose collect runs no job. No Window, no
+join: the expensive parts are the underlying searches; fusion itself is
+O(k).
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from vecgo_spark.operators import bm25 as bm25_mod
 from vecgo_spark.operators import knn
 
 DEFAULT_RRF_K = 60
+
+
+def _rank_key(ascending: bool):
+    """Sort key of one leg's (score, id) rows in Spark's order: NaN is
+    above every double, equal doubles (0.0 == -0.0) tie to the id, and a
+    NULL score sorts last either way (knn._score_order)."""
+    def key(row):
+        score, rid = row
+        if score is None:
+            return (2, 0.0, rid)
+        if math.isnan(score):
+            return (1 if ascending else 0, 0.0, rid)
+        return (0 if ascending else 1, score if ascending else -score, rid)
+    return key
+
+
+def _local_relation(spark, rows: list, id_type: str, id_col: str) -> DataFrame:
+    """(id, rrf_score) rows as a LocalRelation parsed from SQL VALUES —
+    no Python-worker job, unlike createDataFrame(<python list>). Each
+    double is its shortest round-trip literal, so the value is exact."""
+    from vecgo_spark.functions.vector import _dlit_sql
+    from vecgo_spark.operators.bm25 import _sql_str
+
+    def lit(v):
+        return _sql_str(v) if isinstance(v, str) else repr(v)
+    values = ", ".join(f"(CAST({lit(i)} AS {id_type}), {_dlit_sql(s)})" for i, s in rows)
+    q = f"`{id_col.replace('`', '``')}`"
+    return spark.sql(
+        f"SELECT * FROM VALUES {values or f'(CAST(NULL AS {id_type}), 0.0D)'}"
+        f" AS t({q}, rrf_score)" + ("" if rows else " LIMIT 0"))
 
 
 def rrf_fuse(
@@ -38,25 +71,27 @@ def rrf_fuse(
     vec_ascending: bool = True,
     id_col: str = "id",
 ) -> DataFrame:
-    """Fuse two scored lists (id, score) by RRF (engine.go:1560-1602)."""
-    def ranked(df: DataFrame, ascending: bool) -> DataFrame:
-        order = [F.col("score").asc() if ascending else F.col("score").desc(),
-                 F.col(id_col).asc()]
-        w = Window.orderBy(*order)
+    """Fuse two scored lists (id, score) by RRF (engine.go:1560-1602):
+    each leg is ranked 0-based by its own (score, id) order, an id scores
+    Σ 1/(rrf_k + rank + 1) over the legs holding it — the same double
+    arithmetic the reference's loop does — and the result is ordered by
+    (rrf_score desc, id asc), truncated to k. Both legs are bounded, so
+    they are collected in one job; the fuse itself runs here."""
+    tagged = (vec_results.selectExpr("0 AS leg", f"`{id_col}` AS id",
+                                     "CAST(score AS DOUBLE) AS score")
+              .unionByName(lex_results.selectExpr(
+                  "1 AS leg", f"`{id_col}` AS id", "CAST(score AS DOUBLE) AS score")))
+    legs: tuple[list, list] = ([], [])
+    for leg, rid, score in tagged.collect():
+        legs[leg].append((score, rid))
+    fused: dict = {}
+    for rows, ascending in ((legs[0], vec_ascending), (legs[1], False)):
         # rank is 0-based in the reference's loop (engine.go:1565-1576)
-        return df.select(id_col, (F.row_number().over(w) - F.lit(1)).alias("rank"))
-
-    v = ranked(vec_results, vec_ascending).withColumnRenamed("rank", "vrank")
-    l = ranked(lex_results, False).withColumnRenamed("rank", "lrank")
-    rrf = lambda r: F.when(r.isNotNull(), F.lit(1.0) / (F.lit(float(rrf_k)) + r + F.lit(1.0))).otherwise(F.lit(0.0))
-    fused = (
-        v.join(l, id_col, "full_outer")
-        .select(
-            id_col,
-            (rrf(F.col("vrank").cast("double")) + rrf(F.col("lrank").cast("double"))).alias("rrf_score"),
-        )
-    )
-    return fused.orderBy(F.col("rrf_score").desc(), F.col(id_col).asc()).limit(k)
+        for rank, (_score, rid) in enumerate(sorted(rows, key=_rank_key(ascending))):
+            fused[rid] = fused.get(rid, 0.0) + 1.0 / (float(rrf_k) + float(rank) + 1.0)
+    top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    id_type = tagged.schema["id"].dataType.simpleString()
+    return _local_relation(vec_results.sparkSession, top, id_type, id_col)
 
 
 def hybrid_search(
@@ -161,7 +196,9 @@ def hybrid_search_at_rest(
     the exact full scan (SURVEY §7.1's primary path).
     Either way the fuse is shared code, so results are bit-identical to
     `hybrid_search` over the equivalent (id, vector, text) collection
-    restricted to the same cluster set."""
+    restricted to the same cluster set. The fuse collects both legs in
+    one job inside this call (rrf_fuse); the returned local relation's
+    collect runs none."""
     from vecgo_spark.operators import lexical_at_rest as lex
 
     vector_k = max(2 * k, 50)  # engine.go:1545-1548

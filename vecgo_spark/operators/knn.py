@@ -82,9 +82,17 @@ def metric_ascending(metric: str) -> bool:
         raise ValueError(f"unknown metric {metric!r}; expected one of {sorted(METRICS)}") from None
 
 
+def _score_order(metric: str) -> Column:
+    """Best-first score order. A NULL score (a NULL vector, which the
+    insert dim check admits) sorts last for either polarity: Spark's
+    ascending default is NULLS FIRST, which would rank it ahead of every
+    real match."""
+    return (F.col("score").asc_nulls_last() if metric_ascending(metric)
+            else F.col("score").desc_nulls_last())
+
+
 def _ordered(df: DataFrame, metric: str, id_col: str) -> DataFrame:
-    score = F.col("score").asc() if metric_ascending(metric) else F.col("score").desc()
-    return df.orderBy(score, F.col(id_col).asc())
+    return df.orderBy(_score_order(metric), F.col(id_col).asc())
 
 
 def search(
@@ -143,11 +151,8 @@ def batch_search(
     )
     if metric == "cosine":
         scored = scored.where(F.col("score").isNotNull())
-    order = [
-        F.col("score").asc() if metric_ascending(metric) else F.col("score").desc(),
-        F.col(id_col).asc(),
-    ]
-    w = Window.partitionBy(qid_col).orderBy(*order)
+    w = Window.partitionBy(qid_col).orderBy(_score_order(metric),
+                                             F.col(id_col).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

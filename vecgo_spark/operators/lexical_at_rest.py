@@ -35,32 +35,34 @@ graph families use (operators/minhash_at_rest.py shape):
   vacuum:   dirs are referenced via meta["lexical"] paths.
 
 Scale posture: per-query reads touch |query terms| postings (row-group
-pruned) ONCE — per-term docFreq comes from stored per-segment df
-sidecars on clean snapshots (bm25.go:29-53's running docFreq; a
-|terms|-row lookup) and from a persisted shared candidate frame under
-churn — plus either the manifest counters (clean snapshot: zero-job
-N/Σdl, the engine-stats stance of count()) or, under churn, ONE
-aggregate over the visible query-term postings and marker rows that
-yields N, Σdl and every query term's df together (per-doc dl is
-genuinely required for N/Σdl); the corpus text column is never touched
-for indexed segments. Tombstones and upserts resolve against the
-table's CACHED per-snapshot kill frame (table._vis_vmax — the same
-structure the vector read path consults; one visibility mechanism for
-every path, exactly the reference's single loaded PK index,
-internal/pk/mvcc.go:125 consulted by search.go:1092-1105 and
-engine.go:1617-1632), NOT by re-aggregating this family's marker rows.
+pruned) ONCE. On a clean snapshot N/Σdl come from the manifest counters
+and per-term docFreq from the per-segment df sidecars, loaded ONCE per
+snapshot into a resident {term: df} map beside N/Σdl when their row
+count (recorded at build) fits _RESIDENT_MAX_DF_TERMS — the
+reference's in-memory running docFreq, bm25.go:29-53 — so a fresh text
+plans with zero jobs; past the bound it is a |terms|-row sidecar lookup.
+Under churn ONE aggregate over the visible query-term postings and
+marker rows yields N, Σdl and every query term's df together (per-doc
+dl is genuinely required for N/Σdl). The bounded candidate aggregate
+runs in a single task (no shuffle stage) and is persisted for repeats;
+the corpus text column is never touched for indexed segments.
+Tombstones and upserts resolve against the table's CACHED per-snapshot
+kill frame (table._vis_vmax — the same structure the vector read path
+consults; one visibility mechanism for every path, exactly the
+reference's single loaded PK index, internal/pk/mvcc.go:125 consulted
+by search.go:1092-1105 and engine.go:1617-1632), NOT by re-aggregating
+this family's marker rows.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vecgo_spark.operators.bm25 import B, K1, tokenize_expr, tokenize_py
+from vecgo_spark.operators.bm25 import _sql_str, score_sql, tokenize_expr, tokenize_py
 
 FAMILY = "lexical"
 
@@ -81,6 +83,12 @@ def _segment_rows(tbl, segs, text_col: str,
         eval_once(tokenize_expr(text_col)).alias("toks"),
     ).withColumn("_seg", seg_tag_expr()).withColumn(
         "dl", F.size("toks").cast("long"))
+    markers = base.select(
+        "id", "_lsn", "_seg", "dl",
+        F.lit(None).cast("string").alias("term"), F.lit(0).cast("long").alias("tf"))
+    cols = ["id", "_lsn", "_seg", "term", "tf", "dl"]
+    if terms == []:
+        return markers.select(*cols)
     if terms is None:
         postings = (
             base.select("id", "_lsn", "_seg", "dl", F.explode("toks").alias("term"))
@@ -88,20 +96,15 @@ def _segment_rows(tbl, segs, text_col: str,
             .agg(F.count(F.lit(1)).alias("tf"))
         )
     else:
-        def tf(t):
-            return F.size(F.filter("toks", lambda x: x == F.lit(t)))
-
-        tfs = F.array(*[F.struct(F.lit(t).alias("term"),
-                                 tf(t).cast("long").alias("tf"))
-                        for t in terms])
-        postings = base.select("id", "_lsn", "_seg", "dl", F.inline(
-            F.filter(tfs, lambda p: p["tf"] > 0)))
-    markers = base.select(
-        "id", "_lsn", "_seg", "dl",
-        F.lit(None).cast("string").alias("term"), F.lit(0).cast("long").alias("tf"))
-    cols = ["id", "_lsn", "_seg", "term", "tf", "dl"]
-    if terms == []:
-        return markers.select(*cols)
+        # one parsed SQL string for every term's count (the Column
+        # builder paid a lambda's py4j round trips per term)
+        tfs = ", ".join(
+            f"named_struct('term', {_sql_str(t)}, 'tf', "
+            f"CAST(size(filter(toks, x -> x = {_sql_str(t)})) AS BIGINT))"
+            for t in terms)
+        postings = base.selectExpr(
+            "id", "_lsn", "_seg", "dl",
+            f"inline(filter(array({tfs}), p -> p.tf > 0))")
     return postings.select(*cols).unionByName(markers.select(*cols))
 
 
@@ -112,7 +115,12 @@ def df_dir(rel: str) -> str:
     return rel + "-df"
 
 
-def _write_lex_dir(tbl, segs, version: int, text_col: str, extra=None) -> str:
+def _write_lex_dir(tbl, segs, version: int, text_col: str, df_rows: dict,
+                   extra=None) -> str:
+    """Write the postings dir and its df sidecar; record the sidecar's
+    row count, observed on its write, in `df_rows[rel]`."""
+    from pyspark.sql import Observation
+
     from vecgo_spark.plans.manifest import fs_exists, fs_rmtree
     from vecgo_spark.plans.table import INDEX_DIR
 
@@ -139,11 +147,14 @@ def _write_lex_dir(tbl, segs, version: int, text_col: str, extra=None) -> str:
     # the query-time df aggregate over candidates disappears. Term-sorted
     # for the same row-group pruning as the postings.
     written = tbl.spark.read.parquet(full)
+    obs = Observation()
     (written.where(F.col("term").isNotNull())
         .groupBy("_seg", "term").agg(F.count(F.lit(1)).alias("df"))
         .repartitionByRange(F.col("term"))
         .sortWithinPartitions("term")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .write.mode("error").parquet(os.path.join(tbl.path, df_dir(rel))))
+    df_rows[rel] = int(obs.get["n"])
     return rel
 
 
@@ -175,11 +186,13 @@ def build_lexical_index(tbl, text_col: str = "text") -> int:
     if not man.segments:
         raise ValueError("nothing to index: table has no committed segments")
     version = man.version + 1
-    rel = _write_lex_dir(tbl, man.segments, version, text_col)
+    df_rows: dict[str, int] = {}
+    rel = _write_lex_dir(tbl, man.segments, version, text_col, df_rows)
     info = {
         "path": rel, "segments": [s.path for s in man.segments],
         "text_col": text_col,
         "seg_counts": _seg_counts(tbl, man.segments, text_col),
+        "df_rows": df_rows,
     }
     from vecgo_spark.operators.graph_at_rest import record_dir_bytes
     record_dir_bytes(tbl, info)
@@ -197,11 +210,13 @@ def build_lexical_index(tbl, text_col: str = "text") -> int:
 
 def refresh_lexical_index(tbl, max_dirs: int = 8) -> int:
     """Index segments committed after the last build/refresh (shared
-    refresh/fold core); per-segment counters ride the same publish."""
-    from vecgo_spark.operators.graph_at_rest import refresh_family_dirs
+    refresh/fold core); per-segment counters and the new dir's df
+    sidecar row count ride the same publish."""
+    from vecgo_spark.operators.graph_at_rest import blob_paths, refresh_family_dirs
 
     info = tbl.manifest.meta.get(FAMILY) or {}
     text_col = info.get("text_col", "text")
+    written: dict[str, int] = {}
 
     def info_update(new_info, new_segs):
         counts = dict(new_info.get("seg_counts") or {})
@@ -209,11 +224,13 @@ def refresh_lexical_index(tbl, max_dirs: int = 8) -> int:
         counts = {p: c for p, c in counts.items() if p in live}
         counts.update(_seg_counts(tbl, new_segs, text_col))
         new_info["seg_counts"] = counts
+        rows = {**(new_info.get("df_rows") or {}), **written}
+        new_info["df_rows"] = {p: rows[p] for p in blob_paths(new_info) if p in rows}
 
     return refresh_family_dirs(
         tbl, FAMILY,
         lambda new_segs, version, extra: _write_lex_dir(
-            tbl, new_segs, version, text_col, extra=extra),
+            tbl, new_segs, version, text_col, written, extra=extra),
         seg_col="_seg", max_dirs=max_dirs, info_update=info_update)
 
 
@@ -275,14 +292,30 @@ def _visible_rows(tbl, terms: list[str] | None, markers: bool,
     return tbl._visible(base, include_pending, id_col="id")
 
 
-# churn-path (n_docs, total_len) memo — the reference holds N/Σdl as
-# RUNNING counters that are simply read per query (bm25.go:29-53); on a
-# churned snapshot we must derive them from the marker rows + the
-# visibility join, but the result is immutable per committed snapshot,
-# so repeat queries read two ints instead of re-running the marker scan.
-# Keyed like the vis cache (path + version); bounded, oldest-first.
-_COUNTS_CACHE: dict[tuple, tuple[int, int]] = {}
+# per-snapshot corpus statistics memo: (n_docs, total_len, docFreq map
+# or None). The reference holds N/Σdl and docFreq as RUNNING counters
+# read per query (bm25.go:29-53). A churned snapshot derives N/Σdl from
+# the marker rows + the visibility join (keyed by _counts_key, no map);
+# a clean one takes them from the manifest counters and loads its df
+# sidecars once into an entry keyed by the snapshot alone (_df_key,
+# _resident_df). Either way the result is immutable per snapshot, so
+# repeat queries read it instead of re-running a scan. Bounded,
+# oldest-first; the docFreq maps of all tables also share one budget of
+# _RESIDENT_MAX_DF_TERMS terms, the oldest map dropped first.
+_COUNTS_CACHE: dict[tuple, tuple[int, int, dict[str, int] | None]] = {}
 _COUNTS_CACHE_CAP = 64
+
+
+def _memo_counts(key: tuple, entry: tuple) -> None:
+    while len(_COUNTS_CACHE) >= _COUNTS_CACHE_CAP:
+        _COUNTS_CACHE.pop(next(iter(_COUNTS_CACHE)))
+    _COUNTS_CACHE[key] = entry
+    maps = [k for k, v in _COUNTS_CACHE.items() if v[2] is not None]
+    held = sum(len(_COUNTS_CACHE[k][2]) for k in maps)
+    for k in maps:
+        if held <= _RESIDENT_MAX_DF_TERMS:
+            break
+        held -= len(_COUNTS_CACHE.pop(k)[2])
 
 
 def _counts_key(tbl, include_pending: bool) -> tuple:
@@ -295,6 +328,13 @@ def _counts_key(tbl, include_pending: bool) -> tuple:
     return (tbl.path, man.version, man.meta[FAMILY].get("path"),
             _snapshot_id(man), include_pending, len(tbl._pending),
             len(tbl._pending_tombs))
+
+
+def _df_key(tbl) -> tuple:
+    """Memo key of a clean snapshot's resident docFreq map: the snapshot
+    alone, so its committed and include_pending views (the same corpus
+    when clean) share one map."""
+    return _counts_key(tbl, False)[:4]
 
 
 def _clean(tbl, include_pending: bool) -> bool:
@@ -314,19 +354,18 @@ def _churn_stats(tbl, terms: list[str],
     """(n_docs, total_len, {term: df}) of a churned snapshot from ONE
     aggregate over its visible marker rows and query-term postings (one
     posting row per (doc version, term), and the visibility join leaves
-    one version per id). Memoizes (n_docs, total_len) per snapshot."""
-    marker = F.col("term").isNull()
+    one version per id), parsed from one SQL string. Memoizes
+    (n_docs, total_len) per snapshot."""
+    aggs = ["count(CASE WHEN term IS NULL THEN 1 END) AS n",
+            "sum(CASE WHEN term IS NULL THEN dl END) AS total",
+            *[f"count(CASE WHEN term = {_sql_str(t)} THEN 1 END) AS df_{i}"
+              for i, t in enumerate(terms)]]
     row = (_visible_rows(tbl, terms=terms, markers=True,
                          include_pending=include_pending)
-           .agg(F.count(F.when(marker, 1)).alias("n"),
-                F.sum(F.when(marker, F.col("dl"))).alias("total"),
-                *[F.count(F.when(F.col("term") == F.lit(t), 1)).alias(f"df_{i}")
-                  for i, t in enumerate(terms)])
-           .first())
+           .agg(F.expr(f"struct({', '.join(aggs)}) AS s"))
+           .first()["s"])
     n, total = int(row["n"]), int(row["total"] or 0)
-    while len(_COUNTS_CACHE) >= _COUNTS_CACHE_CAP:
-        _COUNTS_CACHE.pop(next(iter(_COUNTS_CACHE)))
-    _COUNTS_CACHE[_counts_key(tbl, include_pending)] = (n, total)
+    _memo_counts(_counts_key(tbl, include_pending), (n, total, None))
     return n, total, {t: int(row[f"df_{i}"]) for i, t in enumerate(terms)}
 
 
@@ -350,7 +389,7 @@ def corpus_counts(tbl, include_pending: bool = False) -> tuple[int, int]:
         return n, total
     hit = _COUNTS_CACHE.get(_counts_key(tbl, include_pending))
     if hit is not None:
-        return hit
+        return hit[:2]
     return _churn_stats(tbl, [], include_pending)[:2]
 
 
@@ -377,6 +416,13 @@ _RESIDENT_MAX_CANDIDATES = 2_000_000  # clean-path residency gate: Σ df
 # the candidate frame's rows; above this, the frame streams per query
 # instead of occupying the block store — a query for a stop-word-like
 # term on a 100 TB corpus must never pin a corpus-sized frame.
+_RESIDENT_MAX_DF_TERMS = 100_000  # resident docFreq gate: a clean
+# snapshot loads its df sidecars into a driver-side {term: df} map only
+# when their rows fit, and the maps of all tables together hold at most
+# this many terms. The load is the first query's cost on each new
+# snapshot; on a 4-core host (local[2]) loading 100k sidecar rows took
+# 331 ms against 290 ms for one |terms|-row lookup, so the map pays from
+# the second query on; 2M rows took 3.1 s (a 83 MB map) against 171 ms.
 _CACHED_GLOBAL_CAP = 32  # across ALL tables — per-table keying (r11)
 # must not lose the total bound the original global list enforced: a
 # session touching many churned tables (per-tenant scratch tables) would
@@ -442,14 +488,48 @@ def evict_stale(table_path: str, man) -> None:
 
 
 def release_caches(table_path: str | None = None) -> None:
-    """Unpersist candidate frames persisted by bm25_search_at_rest on the
-    churn path (long-lived sessions issuing many queries should call this
-    once results are consumed). With table_path, only that table's frames
-    are released."""
+    """Unpersist candidate frames persisted by bm25_search_at_rest and
+    drop resident docFreq maps (long-lived sessions issuing many queries
+    should call this once results are consumed). With table_path, only
+    that table's frames and maps are released."""
     keys = [table_path] if table_path is not None else list(_CACHED)
     for k in keys:
         for frame, _dfmap in _CACHED.pop(k, {}).values():
             frame.unpersist()
+    for key in [k for k, v in _COUNTS_CACHE.items()
+                if v[2] is not None and table_path in (None, k[0])]:
+        _COUNTS_CACHE.pop(key)
+
+
+def _resident_df(tbl, info) -> dict[str, int] | None:
+    """{term: docFreq} over every term of a clean snapshot, loaded from
+    the live segments' df sidecars ONCE per snapshot into a
+    _COUNTS_CACHE entry beside N and Σdl — the reference's in-memory
+    docFreq (bm25.go:29-53). Only when the sidecars' row count, observed
+    on their write, is within _RESIDENT_MAX_DF_TERMS; None otherwise
+    (or for dirs that predate the recorded count)."""
+    from vecgo_spark.operators.graph_at_rest import blob_paths
+
+    paths = blob_paths(info)
+    rows = info.get("df_rows") or {}
+    if not all(p in rows for p in paths) or \
+            sum(rows[p] for p in paths) > _RESIDENT_MAX_DF_TERMS:
+        return None
+    key = _df_key(tbl)
+    hit = _COUNTS_CACHE.get(key)
+    if hit is not None:
+        return hit[2]
+    live = sorted(s.path for s in tbl.manifest.segments)
+    # one narrow scan collected as Arrow (no Python worker), summed
+    # per term driver-side: a groupBy would add a shuffle stage
+    tab = (tbl._read_parquet_cached(
+        [os.path.join(tbl.path, df_dir(p)) for p in paths],
+        "_seg string, term string, df long")
+        .where(F.col("_seg").isin(live)).select("term", "df")
+        .toArrow().group_by("term").aggregate([("df", "sum")]))
+    dfs = dict(zip(tab.column("term").to_pylist(), tab.column("df_sum").to_pylist()))
+    _memo_counts(key, (*corpus_counts(tbl), dfs))
+    return dfs
 
 
 def _stored_term_df(tbl, info, terms: list[str],
@@ -458,15 +538,20 @@ def _stored_term_df(tbl, info, terms: list[str],
     ONLY on a clean snapshot (no tombstones/upserts, every segment
     indexed, no staged rows in view: then one posting row per (doc,
     term) ⇒ Σ_seg df is the true per-term document frequency, the
-    reference's running docFreq, bm25.go:29-53). Returns None when the
-    snapshot isn't clean or a sidecar is missing (dirs written before
-    the sidecar existed)."""
+    reference's running docFreq, bm25.go:29-53). Served with no job from
+    the snapshot's resident map (_resident_df) when the sidecars fit
+    the residency bound; otherwise one narrow scan of the query terms'
+    sidecar rows. Returns None when the snapshot isn't clean or a
+    sidecar is missing (dirs written before the sidecar existed)."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
     from vecgo_spark.plans.manifest import fs_exists
 
     man = tbl.manifest
     if not _clean(tbl, include_pending):
         return None
+    resident = _resident_df(tbl, info)
+    if resident is not None:
+        return {t: resident.get(t, 0) for t in terms}
     rels = [df_dir(p) for p in blob_paths(info)]
     if not all(fs_exists(os.path.join(tbl.path, r)) for r in rels):
         return None
@@ -492,8 +577,8 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
     `bm25.bm25_search(tbl.df(), ...)`: tf/dl/df/N are the same integers
     (stored groupBy counts == size(filter(tokens, =t)) by tokenizer
     determinism), so the literal-idf fixed-term-order score expression
-    (bm25.bm25_score) reproduces the same doubles; score desc, id asc,
-    round(·, 10) exactly as the plain path.
+    (bm25.score_sql, shared with the plain path) reproduces the same
+    doubles; score desc, id asc, round(·, 10) exactly as the plain path.
 
     At most one postings read per query, zero on a repeat: the (frame,
     dfmap) pair is immutable per committed snapshot + artifact + term
@@ -501,15 +586,17 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
     reference's resident-index economics (its postings live in memory;
     here residency is the persisted frame; release_caches() frees them).
     A fresh CLEAN-snapshot query takes N/Σdl from the manifest counters
-    and per-term docFreq from the STORED df sidecars (a |terms|-row
-    lookup, the reference's running counters); a fresh CHURN-path query
-    takes N, Σdl and every docFreq from ONE aggregate over the visible
-    markers and query-term postings (_churn_stats). Either way the
-    dfmap bounds |candidates| before the scoring pass runs, and the
-    candidate frame is persisted for repeats ONLY when that bound is
-    small (Σ df ≤ _RESIDENT_MAX_CANDIDATES; a common-term corpus-sized
-    frame on a 100 TB table must stream, never occupy the block store).
-    The scoring plan reads postings only — no marker rows."""
+    and per-term docFreq from the snapshot's resident docFreq map (no
+    job; _stored_term_df); a fresh CHURN-path query takes N, Σdl and
+    every docFreq from ONE aggregate over the visible markers and
+    query-term postings (_churn_stats). Either way the dfmap bounds
+    |candidates| before the scoring pass runs. When that bound is small
+    (Σ df ≤ _RESIDENT_MAX_CANDIDATES; a common-term corpus-sized frame
+    on a 100 TB table must stream, never occupy the block store) the
+    candidate frame is persisted for repeats and aggregated in a single
+    task: one partition needs no Exchange, so AQE runs no shuffle-stage
+    job. The scoring plan reads postings only — no marker rows; the
+    aggregate and the score are each one parsed SQL string."""
     spark = tbl.spark
     qterms: dict[str, int] = {}
     for t in tokenize_py(query_text):
@@ -534,7 +621,6 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
     avg_dl = float(total_len) / float(n_docs) if n_docs else 0.0
     if n_docs == 0 or avg_dl == 0.0:
         return spark.createDataFrame([], "id long, score double")
-    n = float(n_docs)
 
     from vecgo_spark import cache_stats
 
@@ -542,7 +628,7 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
                        scope=tbl.path)
     if hit is not None:
         # repeat query: frame AND dfmap from the cache — not even the
-        # |terms|-row sidecar lookup runs
+        # docFreq lookup runs
         cand, dfmap = hit
     else:
         if dfmap is None:
@@ -550,35 +636,26 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
                                     include_pending=include_pending)
         if dfmap is None:  # clean snapshot, dirs predate the df sidecars
             dfmap = _churn_stats(tbl, terms, include_pending)[2]
+        resident = sum(dfmap.values()) <= _RESIDENT_MAX_CANDIDATES
         # the scoring pass reads postings only — no marker rows
-        cand = (
-            _visible_rows(tbl, terms=terms, markers=False,
-                          include_pending=include_pending)
-            .groupBy("id")
-            .agg(F.max("dl").alias("dl"),
-                 *[F.coalesce(
-                     F.max(F.when(F.col("term") == F.lit(t), F.col("tf"))),
-                     F.lit(0)).alias(f"tf_{i}") for i, t in enumerate(terms)])
-        )
-        if sum(dfmap.values()) <= _RESIDENT_MAX_CANDIDATES:
+        rows = _visible_rows(tbl, terms=terms, markers=False,
+                             include_pending=include_pending)
+        if resident:
+            rows = rows.coalesce(1)
+        tfs = ", ".join(
+            f"coalesce(max(CASE WHEN term = {_sql_str(t)} THEN tf END), 0) AS tf_{i}"
+            for i, t in enumerate(terms))
+        cand = (rows.groupBy("id").agg(F.expr(f"struct(max(dl) AS dl, {tfs}) AS c"))
+                .selectExpr("id", "c.*"))
+        if resident:
             cand = cand.persist()
             _cache_candidate(tbl.path, ckey, cand, dfmap)
 
-    score = F.lit(0.0)
-    for i, t in enumerate(terms):
-        df_t = dfmap[t]
-        idf = math.log(1.0 + (n - df_t + 0.5) / (df_t + 0.5))
-        tf = F.col(f"tf_{i}").cast("double")
-        dl = F.col("dl").cast("double")
-        contrib = F.lit(float(qterms[t])) * (
-            F.lit(idf)
-            * ((tf * F.lit(K1 + 1.0)) / (tf + F.lit(K1 * (1.0 - B)) + F.lit(K1 * B / avg_dl) * dl))
-        )
-        score = score + F.when(F.col(f"tf_{i}") > 0, contrib).otherwise(F.lit(0.0))
+    score = score_sql(terms, qterms, [dfmap[t] for t in terms], n_docs, avg_dl)
     return (
-        cand.select("id", score.alias("score"))
-        .where(F.col("score") > 0.0)
+        cand.selectExpr("id", f"({score}) AS score")
+        .where("score > 0.0D")
         .orderBy(F.col("score").desc(), F.col("id").asc())
         .limit(k)
-        .select("id", F.round(F.col("score"), 10).alias("score"))
+        .selectExpr("id", "round(score, 10) AS score")
     )

@@ -189,6 +189,16 @@ def fs_write_text(path: str, data: str) -> None:
         f.write(data.encode())
 
 
+def fs_write_parquet(path: str, table) -> None:
+    """Write a small pyarrow Table as the parquet directory `path` (one
+    part file) — the layout a Spark write leaves, without a Spark job."""
+    import pyarrow.parquet as pq
+
+    fs, p = _fs_for(path)
+    fs.create_dir(p, recursive=True)
+    pq.write_table(table, f"{p.rstrip('/')}/part-00000.parquet", filesystem=fs)
+
+
 def manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, MANIFEST_DIR, f"v{version:08d}.json")
 

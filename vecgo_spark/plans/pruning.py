@@ -61,40 +61,42 @@ def _pass1_spec(
     return cols, string_cols, numeric_cols, do_vec
 
 
-def _pass1_aggs(
+def _pass1_agg(
     cols: list[str], string_cols: list[str], numeric_cols: list[str],
     do_vec: bool, vector_col: str | None, dim: int | None,
-) -> list:
-    aggs = [F.count(F.lit(1)).alias("__n")]
+):
+    """Every pass-1 aggregate as fields of ONE struct column `s`, parsed
+    from one SQL string (the pass-2 idiom): built from Column calls they
+    cost several py4j round trips apiece, 0.1-0.2 s of driver time per
+    segment write."""
+    aggs = ["count(1) AS __n"]
     for c in cols:
-        aggs += [
-            F.min(c).alias(f"{c}__min"),
-            F.max(c).alias(f"{c}__max"),
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
-        ]
+        q = _sql_col(c)
+
+        def name(stat: str) -> str:
+            return _sql_col(f"{c}__{stat}")
+        aggs += [f"min({q}) AS {name('min')}", f"max({q}) AS {name('max')}",
+                 f"sum(CASE WHEN {q} IS NULL THEN 1 ELSE 0 END) AS {name('nulls')}"]
         if c in numeric_cols:
             # sum + sumsq (StatsCollector's running moments,
             # stats_collector.go) → mean/stddev for cost estimation
-            aggs += [
-                F.sum(F.col(c).cast("double")).alias(f"{c}__sum"),
-                F.sum(F.col(c).cast("double") * F.col(c).cast("double"))
-                .alias(f"{c}__sumsq"),
-            ]
+            x = f"CAST({q} AS DOUBLE)"
+            aggs += [f"sum({x}) AS {name('sum')}", f"sum({x} * {x}) AS {name('sumsq')}"]
         if c in string_cols:
             # collect_set caps driver cost via slice; if truncated (>16
             # distinct) the set is dropped as unusable
-            aggs.append(F.slice(F.sort_array(F.collect_set(c)), 1, 17).alias(f"{c}__vals"))
+            aggs.append(f"slice(sort_array(collect_set({q})), 1, 17) AS {name('vals')}")
     if do_vec:
-        v = F.col(vector_col).cast("array<double>")
-        aggs += [F.sum(v[i]).alias(f"__vs{i}") for i in range(dim)]
-    return aggs
+        v = f"CAST({_sql_col(vector_col)} AS ARRAY<DOUBLE>)"
+        aggs += [f"sum({v}[{i}]) AS __vs{i}" for i in range(dim)]
+    return F.expr(f"struct({', '.join(aggs)}) AS s")
 
 
 def _pass1_finalize(
     row, cols: list[str], string_cols: list[str], numeric_cols: list[str],
     do_vec: bool, dim: int | None,
 ) -> tuple[dict[str, Any], list[float] | None]:
-    """row is any mapping alias → value (an agg Row or Observation.get)."""
+    """row is the pass-1 struct (see _pass1_agg), a Row of stat → value."""
     n_rows = int(row["__n"] or 0)
     # the row count rides the stats pass for free — callers (segment
     # builds) use it instead of issuing a separate count() job
@@ -150,8 +152,8 @@ def collect_segment_stats(
         df.schema, exclude, vector_col, dim)
     if not cols and not do_vec:
         return {}
-    row = df.agg(*_pass1_aggs(cols, string_cols, numeric_cols,
-                              do_vec, vector_col, dim)).first()
+    row = df.agg(_pass1_agg(cols, string_cols, numeric_cols,
+                            do_vec, vector_col, dim)).first()["s"]
     out, centroid = _pass1_finalize(row, cols, string_cols, numeric_cols, do_vec, dim)
     return _pass2_apply(df, out, centroid, cols, string_cols, numeric_cols,
                         vector_col)
@@ -176,11 +178,11 @@ def observe_segment_stats(
     if not cols and not do_vec:
         return df, lambda written: {}
     obs = Observation()
-    df = df.observe(obs, *_pass1_aggs(cols, string_cols, numeric_cols,
-                                      do_vec, vector_col, dim))
+    df = df.observe(obs, _pass1_agg(cols, string_cols, numeric_cols,
+                                    do_vec, vector_col, dim))
 
     def finalize(written: DataFrame) -> dict[str, Any]:
-        row = obs.get
+        row = obs.get["s"]
         out, centroid = _pass1_finalize(
             row, cols, string_cols, numeric_cols, do_vec, dim)
         return _pass2_apply(written, out, centroid, cols, string_cols,

@@ -53,6 +53,7 @@ from vecgo_spark.plans.manifest import (
     fs_read_text,
     fs_remove_file,
     fs_rmtree,
+    fs_write_parquet,
     fs_write_text,
     list_versions,
     load_manifest,
@@ -625,17 +626,20 @@ class VectorTable:
         """Tombstone ids (idempotent; BatchDelete engine.go:1186-1302).
         The id list is driver-side, so exact tombstone id stats (count /
         min / max / dense-interval flag) are free — they ride the manifest
-        and let count() stay zero-job on tombstoned snapshots."""
+        and let count() stay zero-job on tombstoned snapshots. The
+        `(id long, _lsn long)` file is written by pyarrow: a Spark write
+        of a Python list runs a Python-worker job for a few KB."""
+        import pyarrow as pa
+
         t0 = time.perf_counter()
         self._check_writable()
         lsn = self._next_lsn()
         name = f"tomb-{lsn:08d}-{uuid.uuid4().hex[:8]}"
         rel = os.path.join(TOMB_DIR, name)
         uniq = sorted({int(i) for i in ids})
-        df = self.spark.createDataFrame(
-            [(i, lsn) for i in uniq], f"{self.id_col} long, _lsn long"
-        )
-        df.write.mode("error").parquet(os.path.join(self.path, rel))
+        fs_write_parquet(os.path.join(self.path, rel), pa.table({
+            self.id_col: pa.array(uniq, pa.int64()),
+            "_lsn": pa.array([lsn] * len(uniq), pa.int64())}))
         self._pending_tombs.append(rel)
         if uniq:
             self._pending_tomb_stats[rel] = {
@@ -2037,7 +2041,7 @@ class VectorTable:
         if cond is not None:
             base = base.where(cond)
         if codes == "sq":
-            score = sqz.adc_sq_l2(params, q, F.col(QCODE_COL))
+            score = sqz.adc_sq_l2(params, q, QCODE_COL)
         elif codes in ("bq", "rabitq"):
             from vecgo_spark.functions import vector as vfn
             from vecgo_spark.quantization import binary as bqz

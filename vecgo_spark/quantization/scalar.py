@@ -127,34 +127,57 @@ def encode(params: ScalarParams, vector_col: Column | str) -> Column:
     return F.transform(v, lambda x, i: code(x, i).cast("int"))
 
 
+def _inv_scale(params: ScalarParams) -> list[float]:
+    return [((d if d != 0.0 else 1.0) if params.levels == 15 else d) / params.levels
+            for d in params.diffs]
+
+
+def _decode_sql(params: ScalarParams, codes_col: Column | str) -> str | None:
+    """decode() as SQL text for a plain column name; None for a Column."""
+    from vecgo_spark.functions.vector import _NAME, _darray_sql
+
+    if not (isinstance(codes_col, str) and _NAME.fullmatch(codes_col)):
+        return None
+    return (f"transform(`{codes_col}`, (x, i) -> get({_darray_sql(params.mins)}, i)"
+            f" + CAST(x AS DOUBLE) * get({_darray_sql(_inv_scale(params))}, i))")
+
+
 def decode(params: ScalarParams, codes_col: Column | str) -> Column:
-    """ARRAY<DOUBLE> dequantized values: mn_i + code_i * (diff_i/levels)."""
-    c = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-    mn = _lit_arr(params.mins)
-    inv = _lit_arr(
-        ((d if d != 0.0 else 1.0) if params.levels == 15 else d) / params.levels
-        for d in params.diffs
-    )
-    return F.transform(c, lambda x, i: F.get(mn, i) + x.cast("double") * F.get(inv, i))
+    """ARRAY<DOUBLE> dequantized values: mn_i + code_i * (diff_i/levels).
+    A named codes column goes to the JVM as ONE parsed SQL string (the
+    vector.py idiom: the lambda-built form costs ~20 ms of py4j per
+    128-d build); a Column operand takes the Column builder, same
+    expression."""
+    sql = _decode_sql(params, codes_col)
+    if sql is not None:
+        return F.expr(sql)
+    mn, inv = _lit_arr(params.mins), _lit_arr(_inv_scale(params))
+    return F.transform(codes_col, lambda x, i: F.get(mn, i) + x.cast("double") * F.get(inv, i))
+
+
+def _adc(params: ScalarParams, query: list[float], codes_col: Column | str,
+         term_sql: str, term) -> Column:
+    """Σ term(q_i, decoded_i), folded left to right from 0.0."""
+    from vecgo_spark.functions.vector import _darray_sql
+
+    dec = _decode_sql(params, codes_col)
+    if dec is not None:
+        return F.expr(f"aggregate(zip_with({_darray_sql(query)}, {dec}, (a, b) -> "
+                      f"{term_sql}), 0.0D, (acc, x) -> acc + x)")
+    return F.aggregate(F.zip_with(_lit_arr(query), decode(params, codes_col), term),
+                       F.lit(0.0), lambda acc, x: acc + x)
 
 
 def adc_sq_l2(params: ScalarParams, query: list[float], codes_col: Column | str) -> Column:
     """Asymmetric squared-L2: Σ (q_i - decoded_i)^2, sequential accumulation
     (Sq8uL2BatchPerDimension semantics, quantizer.go:85-107)."""
-    q = _lit_arr(query)
-    dec = decode(params, codes_col)
-    return F.aggregate(
-        F.zip_with(q, dec, lambda a, b: (a - b) * (a - b)), F.lit(0.0), lambda acc, x: acc + x
-    )
+    return _adc(params, query, codes_col, "(a - b) * (a - b)",
+                lambda a, b: (a - b) * (a - b))
 
 
 def adc_dot(params: ScalarParams, query: list[float], codes_col: Column | str) -> Column:
     """Asymmetric dot: Σ q_i * decoded_i (DotProduct, quantizer.go:109-120)."""
-    q = _lit_arr(query)
-    dec = decode(params, codes_col)
-    return F.aggregate(
-        F.zip_with(q, dec, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
+    return _adc(params, query, codes_col, "a * b", lambda a, b: a * b)
 
 
 # ---------------------------------------------------------------- oracles
