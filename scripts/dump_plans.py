@@ -1,7 +1,9 @@
 """Regenerate PLANS.md: formatted physical plans of headline queries with
 the scale commentary the plan is supposed to prove. Run from repo root:
 
-    python scripts/dump_plans.py [sf_dir]
+    python scripts/dump_plans.py [sf_dir] [--only name,name]
+
+--only rewrites just the named sections of the existing PLANS.md.
 """
 
 import os
@@ -368,12 +370,16 @@ COMMENTARY = {
     ),
     "bm25_search_churned_at_rest": (
         "BM25 from stored postings UNDER CHURN (upserts + deletes landed "
-        "after the build). ONE visibility mechanism (r12): the term-"
-        "filtered postings join the table's cached PK-index frame "
-        "(table._vis_vmax — the same persisted winning-LSN map df() "
-        "serves vector reads from) plus the size-gated tombstone "
-        "anti-join; marker rows are read only by the memoized N/Σdl "
-        "corpus counters, never by the scoring pass. The (candidate "
+        "after the build). ONE visibility mechanism: the term-filtered "
+        "postings are filtered by the table's cached kill set "
+        "(table._vis_vmax — read on the driver from the `_pk/` sidecars "
+        "and tombstones, the same loaded PK index df() serves vector "
+        "reads from) as one `CASE WHEN id IN (…) THEN _lsn > L … ELSE "
+        "TRUE END` predicate — no join, no exchange of a kill frame, no "
+        "broadcast. A cold query builds its visible rows once: the "
+        "N/Σdl/docFreq aggregate reads them with the marker rows, the "
+        "scoring pass drops those (`term IS NOT NULL`), which removes "
+        "the recompute leg's marker branch from the plan. The (candidate "
         "frame, dfmap) pair is keyed by (snapshot, artifact, terms) and "
         "reused across calls, so a repeat query's plan is a top-k over "
         "InMemoryTableScan — zero postings reads. Bit-identical to "
@@ -382,29 +388,33 @@ COMMENTARY = {
     ),
     "ann_ivf_churned_at_rest": (
         "Probe-pruned search over a churned cluster layout — the "
-        "adversarial shape for the r10 subset-visibility fix: the "
-        "upserted victim's stale rank-1 row sits in a PROBED cluster "
-        "while its live version moved to an unprobed one. The plan "
-        "shows the probed file scan plus the PK-SIDECAR visibility leg "
-        "(r11: the persisted PK index, engine.go:2226-2262 — a scan of "
-        "the tiny `_pk/` (id, _lsn) files, NEVER a corpus segment "
-        "outside the probe set; inputFiles pin in test_pk_sidecar) "
-        "whose max-LSN join excludes the stale row; pre-fix code "
-        "returns it as the top hit and hash-mismatches. The r10 form "
-        "of this leg re-projected every segment file per query — "
-        "O(corpus) under churn, the r10 verdict's one weak."
+        "adversarial shape for the subset-visibility fix: the upserted "
+        "victim's stale rank-1 row sits in a PROBED cluster while its "
+        "live version moved to an unprobed one. The driver query "
+        "collects this search in its call; shown is the search's own "
+        "plan: the probed file scan and ONE Filter carrying the "
+        "snapshot's kill set (`CASE WHEN id IN (…) THEN _lsn > L … ELSE "
+        "TRUE END`, the persisted PK index engine.go:2226-2262 read on "
+        "the driver from the tiny `_pk/` (id, _lsn) sidecars and the "
+        "tombstones — never a corpus segment outside the probe set), "
+        "which excludes the stale row; pre-fix code returns it as the "
+        "top hit and hash-mismatches. No join, no exchange, no "
+        "broadcast: a cold read after a commit is one job. Past "
+        "VIS_PREDICATE_MAX_IDS kill ids the filter becomes one join on "
+        "a persisted (id, _kill_lsn) kill frame."
     ),
     "point_get_churned": (
         "Churned point-get — the id-RESTRICTED PK consult (the "
         "reference's per-read O(candidates) index lookup, mvcc.go:125). "
         "The id predicate prunes the far-half segment via manifest "
-        "stats AND is pushed into the visibility leg's sidecar scan "
-        "(PushedFilters on the `_pk/` read — row-group pruning instead "
-        "of aggregating every id of the table; such one-off shapes "
-        "skip the vis cache so the cached map stays predicate-free). "
-        "Both scans show In(id, …) in PushedFilters; at 100 TB the "
-        "plan touches one segment's row groups + key-only sidecar "
-        "bytes."
+        "stats and reaches the segment scan as In(id, …) in "
+        "PushedFilters; visibility is the snapshot's cached kill set as "
+        "one in-plan predicate, so no sidecar or tombstone scan runs at "
+        "all. Past VIS_PREDICATE_MAX_IDS kill ids the id predicate is "
+        "pushed into the kill frame's sidecar and tombstone scans "
+        "instead (row-group pruning rather than aggregating every id "
+        "of the table); at 100 TB the plan touches one segment's row "
+        "groups + key-only sidecar bytes."
     ),
     "hybrid_rrf_indexed_at_rest": (
         "The COMPLETE one-table two-index serving path (engine.go:"
@@ -462,10 +472,10 @@ COMMENTARY = {
         "a refresh, r14): the serving plan is still stored-only — NO "
         "applyInPandas gemm (the upsert rows' pairs were gemm'd once at "
         "refresh and live in the -pairs sidecar) — with the (id, lsn) "
-        "endpoint-visibility joins now composing with the tombstone "
-        "anti-join and the winning-LSN filter served from the persisted "
-        "PK-index frame (InMemoryTableScan — the one visibility "
-        "mechanism every serving path consults). The corpus-sized "
+        "endpoint-visibility joins composing with the snapshot's kill "
+        "set, applied as one in-plan predicate on the assigned rows "
+        "(the one visibility mechanism every serving path consults). "
+        "The corpus-sized "
         "assigned frame streams through the statistics-broadcast pair "
         "list exactly as in the clean plan; churn adds per-row "
         "FILTERS, not exchanges of the corpus."
@@ -528,8 +538,26 @@ COMMENTARY = {
 }
 
 
+def _churned_ivf_search(spark, sf_dir: str):
+    import __spark_entry__ as entry
+
+    return entry._churned_ivf_table(spark, sf_dir).search(
+        entry._query_vector(spark, sf_dir), k=10, nprobe=3)
+
+
+# sections whose driver query returns a collected local relation: the
+# plan worth reading is the one its call ran
+PLAN_OF = {"ann_ivf_churned_at_rest": _churned_ivf_search}
+
+
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    args = sys.argv[1:]
+    only = None
+    if "--only" in args:
+        i = args.index("--only")
+        only = set(args[i + 1].split(","))
+        del args[i:i + 2]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
     spark = get_spark("plan-dump")
     import __spark_entry__ as entry
 
@@ -544,16 +572,29 @@ def main() -> None:
         "assertions for these postures live in `tests/test_plans.py`.",
         "",
     ]
+    sections = {}
     for name, note in COMMENTARY.items():
-        df = qs[name](spark, sf_dir)
+        if only is not None and name not in only:
+            continue
+        df = PLAN_OF.get(name, qs[name])(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        out += [f"## {name}", "", note, "", "```", plan.rstrip(), "```", ""]
+        sections[name] = "\n".join(
+            [f"## {name}", "", note, "", "```", plan.rstrip(), "```", ""])
     dest = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    if only is None:
+        text = "\n".join(out + list(sections.values()))
+    else:
+        with open(dest) as f:
+            text = f.read()
+        for name, section in sections.items():
+            start = text.index(f"## {name}\n")
+            end = text.find("\n## ", start)
+            text = text[:start] + section + (text[end:] if end >= 0 else "")
     with open(dest, "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote {dest} ({len(COMMENTARY)} plans)")
+        f.write(text)
+    print(f"wrote {dest} ({len(sections)} plans)")
 
 
 if __name__ == "__main__":

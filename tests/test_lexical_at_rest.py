@@ -558,7 +558,8 @@ def test_uncovered_text_col_falls_back_to_recompute(spark, tdir):
     assert got_h == want_h and got_h
 
 
-def test_churn_visibility_served_from_pk_index_frame(spark, tdir):
+def test_churn_visibility_served_from_pk_index_frame(spark, tdir,
+                                                    monkeypatch):
     """r11 verdict #1 — ONE visibility mechanism: under upsert churn the
     lexical serving path resolves latest-version-wins against the SAME
     cached winning-LSN frame df() consults (the persisted PK index,
@@ -567,9 +568,11 @@ def test_churn_visibility_served_from_pk_index_frame(spark, tdir):
     only lineage, (b) the serving plan carries NO `term IS NULL` marker
     clause (the pre-r12 signature of the second mechanism), (c) results
     stay bit-identical to the from-text path, including the stale-
-    postings trap (winning version contains none of the query terms)."""
+    postings trap (winning version contains none of the query terms).
+    The frame serves past the in-plan kill-set bound (forced to 0)."""
     from vecgo_spark.plans import table as tmod
 
+    monkeypatch.setattr(tmod, "VIS_PREDICATE_MAX_IDS", 0)
     tbl = VectorTable.create(spark, tdir, dim=None)
     tbl.insert(_docs(spark, range(1, 31)))
     tbl.commit()

@@ -201,7 +201,7 @@ def test_stats_pass2_is_one_narrow_aggregate(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------
-# Reads after a commit: visibility comes from one per-snapshot kill frame
+# Reads after a commit: visibility comes from one per-snapshot kill set
 # and readers know their schema, so a read pays for its scan only.
 
 
@@ -308,30 +308,110 @@ def test_readers_over_new_file_sets_run_no_jobs(spark, tmp_path):
     tmod.release_vis_caches()
 
 
-def test_visibility_plans_hold_one_join_on_the_kill_frame(spark, churned):
-    """df() over a subset, and the lexical, minhash, simhash and semdedup
-    artifacts, each resolve tombstones AND newer versions with exactly
-    one join on the cached kill frame — no tombstone aggregate join of
-    their own, no latest-LSN window."""
+def _visibility_plans(t):
     from vecgo_spark.operators import lexical_at_rest as lex
     from vecgo_spark.operators import minhash_at_rest as mar
     from vecgo_spark.operators import semdedup_at_rest as sdr
     from vecgo_spark.operators import simhash_at_rest as sar
 
-    t = churned
     oldest = min(t.manifest.segments, key=lambda s: s.lsn)
-    plans = {
+    return {
         "df-subset": t.df(segments=[oldest]),
         "lexical": lex._visible_rows(t, ["alpha"], markers=True),
         "minhash": mar.stored_minhash_signatures(t),
         "simhash": sar.stored_simhash_signatures(t),
         "semdedup": sdr._visible_assigned(t),
     }
-    for name, df in plans.items():
+
+
+def test_visibility_plans_hold_one_join_on_the_kill_frame(spark, churned,
+                                                          monkeypatch):
+    """Past the in-plan kill-set bound (forced to 0 here), df() over a
+    subset, and the lexical, minhash, simhash and semdedup artifacts,
+    each resolve tombstones AND newer versions with exactly one join on
+    the cached kill frame — no tombstone aggregate join of their own, no
+    latest-LSN window."""
+    from vecgo_spark.plans import table as tmod
+
+    monkeypatch.setattr(tmod, "VIS_PREDICATE_MAX_IDS", 0)
+    tmod.release_vis_caches()
+    for name, df in _visibility_plans(churned).items():
         plan = _optimized(df)
         assert len(re.findall(r"\bJoin\b", plan)) == 1, (name, plan)
         assert "_kill_lsn" in plan and "Window" not in plan, name
         df.count()
+    tmod.release_vis_caches()
+
+
+def test_visibility_plans_apply_the_kill_set_in_plan(spark, churned):
+    """Within the bound the same reads take the snapshot's kill set as
+    one predicate: no join, no kill frame, no window — and building it
+    reads the sidecars and tombstones on the driver without a job."""
+    from vecgo_spark.plans import table as tmod
+
+    tmod.release_vis_caches()
+    plans, n = _jobs(spark, lambda: _visibility_plans(churned))
+    assert n == 0
+    for name, df in plans.items():
+        plan = _optimized(df)
+        assert not re.findall(r"\bJoin\b", plan), (name, plan)
+        assert "_kill_lsn" not in plan and "Window" not in plan, name
+        assert "InMemoryRelation" not in plan, name
+
+
+def test_cold_churned_ivf_search_is_one_job(spark, churned):
+    """A cold search(nprobe=) after a commit with upserts and deletes
+    runs exactly one job: the kill set needs no shuffle, persist or
+    broadcast stage."""
+    from vecgo_spark.plans import table as tmod
+
+    t = churned
+    tmod.release_vis_caches()
+    rows, n = _jobs(spark, lambda: t.search([4.0, 0.0], k=5,
+                                            nprobe=2).collect())
+    assert n == 1 and rows, n
+    assert not {7, 8} & {r["id"] for r in rows}
+    df = t.search([4.0, 0.0], k=5, nprobe=2)
+    plan = _optimized(df)
+    assert not re.findall(r"\bJoin\b", plan) and "InMemoryRelation" not in plan
+    assert "BroadcastExchange" not in df._jdf.queryExecution() \
+        .executedPlan().toString()
+
+
+def test_maybe_compact_merge_over_tombstones_is_one_job(spark, tmp_path,
+                                                        monkeypatch):
+    """maybe_compact applies its tombstones to the merged rows as one
+    in-plan predicate, so the merged segment's write is one job (no
+    tombstone aggregate, shuffle stage or broadcast)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from vecgo_spark.plans.policy import CompactionTask
+    from vecgo_spark.plans.table import VectorTable
+
+    class _All:
+        def pick(self, segments):
+            return CompactionTask(segments=list(segments))
+
+    t = VectorTable.create(spark, str(tmp_path / "t"), dim=2)
+    t.insert(_docs(spark, range(1, 21), 0))
+    t.commit()
+    t.insert(_docs(spark, [3, 25], 1))
+    t.delete([4, 5, 25])
+    t.commit()
+    counts = []
+    write = DataFrameWriter.parquet
+
+    def counted(self, path, *a, **kw):
+        if "/_segments/" not in path or "-tier-" not in path:
+            return write(self, path, *a, **kw)  # not the merged segment
+        counts.append(_jobs(spark, lambda: write(self, path, *a, **kw))[1])
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted)
+    assert t.maybe_compact(_All()) is not None
+    assert counts == [1], counts
+    monkeypatch.undo()
+    assert sorted(r["id"] for r in t.df().collect()) == [
+        i for i in range(1, 21) if i not in (4, 5)]
 
 
 # ---------------------------------------------------------------------

@@ -337,16 +337,18 @@ def test_backfill_sidecar_names_are_injective():
     assert re.fullmatch(r"[A-Za-z0-9_.~-]+", fn("seg/β π/42"))
 
 
-def test_point_get_reuses_loaded_frame_when_present(spark, tdir):
+def test_point_get_reuses_loaded_frame_when_present(spark, tdir, monkeypatch):
     """r12 (verdict #7 decision): an id-restricted read consults the
     ALREADY-loaded predicate-free frame when one exists for the snapshot
     and is broadcast-sized (repeated point-gets ~2x faster, measured at
     sf0.1); a COLD point-get still builds the row-group-pruned
     id-restricted scan and never populates the cache (one-off economics
-    + the 100 TB scale path). Results identical either way."""
+    + the 100 TB scale path). Results identical either way. Pins the
+    frame path, so the in-plan kill-set bound is forced to 0."""
     from vecgo_spark.filters import FilterSet
     from vecgo_spark.plans import table as tmod
 
+    monkeypatch.setattr(tmod, "VIS_PREDICATE_MAX_IDS", 0)
     tmod.release_vis_caches()
     t = VectorTable.create(spark, tdir, dim=2)
     t.insert(_rows(spark, range(20)))

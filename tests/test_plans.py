@@ -372,6 +372,8 @@ def test_tombstone_broadcast_is_size_gated(spark, tmp_path, monkeypatch):
     t.commit()
     t.delete(list(range(1, 11)))
     t.commit()
+    # the join exists past the in-plan kill-set bound only
+    monkeypatch.setattr(tbl_mod, "VIS_PREDICATE_MAX_IDS", 0)
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     # kill Catalyst's own auto-broadcast so only the explicit hint (or

@@ -504,3 +504,25 @@ def test_null_vector_row_never_ranks_first(spark, tmp_path, nprobe):
         assert len(ids) == 3 and 201 not in ids, (name, ids)
     want = [r["id"] for r in firsts["search"].collect()]
     assert [r["id"] for r in firsts["hybrid"].collect()] == want
+
+
+@pytest.mark.parametrize("nprobe", [None, 4])
+def test_compact_trains_over_a_null_vector_row(spark, tmp_path, nprobe):
+    """compact(cluster_by=, quantize=) trains its IVF centroids and SQ
+    bounds on a sample that leaves NULL vectors out (a NULL row has no
+    coordinates to learn from); the NULL-vector row is kept and still
+    never ranks first."""
+    rng = np.random.default_rng(43)
+    t = VectorTable.create(spark, str(tmp_path / "t"), dim=DIM, metric="l2")
+    schema = "id long, vector array<double>"
+    t.insert(spark.createDataFrame(
+        [(i, rng.standard_normal(DIM).tolist()) for i in range(120)]
+        + [(201, None)], schema))
+    t.commit()
+    t.compact(cluster_by=4, quantize="sq8")
+    assert t.df().count() == 121
+    q = [0.0] * DIM
+    for df in (t.search(q, k=3, nprobe=nprobe),
+               t.search_quantized(q, k=3, nprobe=nprobe, refine=500)):
+        ids = [r["id"] for r in df.collect()]
+        assert len(ids) == 3 and 201 not in ids, ids

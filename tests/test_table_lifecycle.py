@@ -746,14 +746,20 @@ def test_clean_tables_skip_subset_visibility_join(spark, tdir):
     assert [r["id"] for r in df.collect()] == [7]
 
 
-def test_subset_visibility_scan_stays_narrow_and_pushed(spark, tdir):
+def test_subset_visibility_scan_stays_narrow_and_pushed(spark, tdir,
+                                                       monkeypatch):
     """The global-visibility side-scan (r10 fix) must stay cheap at
     scale: it reads ONLY (id, _lsn) — column pruning through the
     union — and for an id-predicate filter Catalyst propagates the
     equi-join key into the side-scan's pushed filters, so even the
-    'full snapshot' pass is row-group-pruned to the touched ids."""
+    'full snapshot' pass is row-group-pruned to the touched ids. The
+    side-scan exists past the in-plan kill-set bound only (forced to 0
+    here)."""
     import re
 
+    from vecgo_spark.plans import table as tmod
+
+    monkeypatch.setattr(tmod, "VIS_PREDICATE_MAX_IDS", 0)
     t = VectorTable.create(spark, tdir, dim=2)
     t.insert(spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(20)],

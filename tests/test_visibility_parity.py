@@ -171,3 +171,122 @@ def test_folded_mixed_lsn_tombstone_file(spark, tmp_path, monkeypatch):
     stats = [t.manifest.tombstone_stats.get(f) for f in t.manifest.tombstone_files]
     assert len(stats) == 1 and stats[0]["mixed"]
     _check(spark, t, m, [2, 11, 60, 61, 1])
+
+
+def _all_reads(t, pending):
+    """Every visibility consumer's answer on `t`, as comparable lists."""
+    from vecgo_spark.operators import semdedup_at_rest as sdr
+    from vecgo_spark.operators import simhash_at_rest as sar
+
+    def rows(df, ordered=False):
+        out = [repr(tuple(r)) for r in df.collect()]
+        return out if ordered else sorted(out)
+
+    segs = list(t.manifest.segments) + (list(t._pending) if pending else [])
+    reads = {f"df-seg-{s.path}": rows(t.df(segments=[s], include_pending=pending))
+             for s in segs}
+    reads["df"] = rows(t.df(include_pending=pending))
+    reads["search"] = rows(t.search(Q4, k=K, nprobe=NLIST,
+                                    include_pending=pending), True)
+    reads["bm25"] = rows(t.bm25_search(Q_TEXT, k=K, include_pending=pending), True)
+    reads["minhash"] = rows(mar.stored_minhash_signatures(t, include_pending=pending))
+    reads["semdedup"] = rows(sdr.semantic_dedup_at_rest(t, include_pending=pending))
+    if not pending:
+        reads["simhash"] = rows(sar.stored_simhash_signatures(t))
+    return reads
+
+
+Q4 = [3.5, 0.0, 1.0, 0.0]
+
+
+def test_kill_set_predicate_matches_kill_frame(spark, tmp_path, monkeypatch):
+    """The driver-read kill set applied as an in-plan predicate and the
+    kill-frame join (the path past VIS_PREDICATE_MAX_IDS, reached here by
+    forcing the bound to 0) return identical rows for every read family,
+    over a seeded random lifecycle: upserts, a partial merge holding two
+    versions of one id, delete then re-insert, delete_where, a folded
+    mixed-LSN tombstone file, NULL ids and ids above 2^53, and the
+    writer's include_pending view."""
+    import random
+
+    import numpy as np
+
+    from vecgo_spark.operators import lexical_at_rest as lex
+    from vecgo_spark.operators.ivf import IVFModel
+
+    monkeypatch.setattr(tmod, "TOMB_FOLD_MAX_FILES", 1)
+    rng = random.Random(7)
+    big = [2 ** 53 + 1, 2 ** 62]
+    t = VectorTable.create(spark, str(tmp_path / "t"), dim=4)
+    writes = [0]
+
+    def insert(ids):
+        writes[0] += 1
+        w = writes[0]
+        t.insert(spark.createDataFrame(
+            [(i, f"v{w}", f"alpha beta tok{(i or 0) % 5} w{w}",
+              [float((i or 0) % 9) + 0.01 * w, float(w % 3), float((i or 0) % 2), 0.5])
+             for i in ids],
+            "id long, tag string, text string, vector array<double>"))
+
+    insert(list(range(1, 31)) + [None] + big)
+    t.commit()
+    t.compact(cluster_by=NLIST)
+    t.build_lexical_index()
+    t.build_minhash_index()
+    t.build_simhash_index()
+    t.build_semdedup_index(IVFModel(
+        centroids=np.array([[1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]]),
+        metric="l2"), threshold=0.9)
+    base_lsn = t.manifest.lsn
+    pool = list(range(1, 31)) + big
+    for _ in range(3):
+        insert(rng.sample(pool, 4) + [None])  # upserts, one more NULL id
+        t.delete(rng.sample(pool, 3))
+        t.commit()
+    gone = rng.choice(pool)
+    t.delete([gone])
+    t.commit()
+    insert([gone, 8, 40] + big)  # re-insert after delete; 8 twice past base_lsn
+    t.commit()
+    insert([8])
+    t.commit()
+    assert t.delete_where("id % 6 = 1") > 0
+    t.commit()
+    assert t.maybe_compact(_Pick(lambda s: s.lsn > base_lsn)) is not None
+    merged = [s for s in t.manifest.segments if "-tier-" in s.path]
+    raw = spark.read.parquet(os.path.join(t.path, merged[0].path))
+    assert raw.where("id = 40").count() == 1 and raw.where("id = 8").count() >= 2
+    stats = [t.manifest.tombstone_stats.get(f) for f in t.manifest.tombstone_files]
+    assert len(stats) == 1 and stats[0]["mixed"]
+    insert([3, 41])  # staged: read only through include_pending
+    t.delete([big[0], 9])
+
+    def both(pending):
+        tmod.release_vis_caches()
+        lex.release_caches()
+        plan = t.df(include_pending=pending)._jdf.queryExecution() \
+            .optimizedPlan().toString()
+        assert "_kill_lsn" not in plan
+        inplan = _all_reads(t, pending)
+        with monkeypatch.context() as mp:
+            mp.setattr(tmod, "VIS_PREDICATE_MAX_IDS", 0)
+            tmod.release_vis_caches()
+            lex.release_caches()
+            plan = t.df(include_pending=pending)._jdf.queryExecution() \
+                .optimizedPlan().toString()
+            assert "_kill_lsn" in plan
+            framed = _all_reads(t, pending)
+        tmod.release_vis_caches()
+        lex.release_caches()
+        return inplan, framed
+
+    for pending in (False, True):
+        inplan, framed = both(pending)
+        assert inplan.keys() == framed.keys()
+        for name in inplan:
+            assert inplan[name] == framed[name], (pending, name)
+        assert inplan["df"] and inplan["bm25"] and inplan["search"]
+        ids = {eval(r)[0] for r in inplan["df"]}
+        assert None in ids and 2 ** 62 in ids
+        assert (big[0] in ids) != pending

@@ -9,9 +9,10 @@ than block caches (Spark owns page/block caching inside the JVM), but
 the accounting question CacheStats answers — "is the serving session
 re-paying work the cache should amortize?" — is the same:
 
-- ``pk_index``      — the loaded PK-index frames (plans/table.py
-                      ``_VIS_CACHE``): per-snapshot (id, _kill_lsn)
-                      kill frames, the analog of the reference's
+- ``pk_index``      — the loaded PK index (plans/table.py
+                      ``_VIS_CACHE``): per-snapshot kill sets (or,
+                      past the in-plan bound, (id, _kill_lsn) kill
+                      frames), the analog of the reference's
                       in-memory PK index (internal/pk/mvcc.go:125).
                       One lookup per read that resolves visibility on a
                       snapshot with tombstones or upserts: df() full

@@ -19,14 +19,14 @@ graph families use (operators/minhash_at_rest.py shape):
             graph_at_rest.refresh_family_dirs core; counters ride the
             same manifest publish through info_update.
   read:     stored rows of live indexed segments ∪ a recompute delta leg
-            for unindexed segments, then the SAME visibility join df()
-            runs (table._visible: one join on the per-snapshot kill
-            frame) on the index rows — so
+            for unindexed segments, then the SAME visibility df()
+            runs (table._visible: the per-snapshot kill set as one
+            predicate) on the index rows — so
             `bm25_search_at_rest` is BIT-IDENTICAL to running
             `bm25.bm25_search` over `tbl.df()`: integer tf/dl/df/N feed
             the same literal-idf fixed-order score expression.
             include_pending=True extends the delta leg to staged
-            (uncommitted) segments and flips the kill frame to the
+            (uncommitted) segments and flips the kill set to the
             read-your-writes view — parity target becomes
             `tbl.df(include_pending=True)` (r12 verdict #2; the
             reference's insert-immediately-searchable lexicalIndex.Add,
@@ -47,11 +47,14 @@ dl is genuinely required for N/Σdl). The bounded candidate aggregate
 runs in a single task (no shuffle stage) and is persisted for repeats;
 the corpus text column is never touched for indexed segments.
 Tombstones and upserts resolve against the table's CACHED per-snapshot
-kill frame (table._vis_vmax — the same structure the vector read path
-consults; one visibility mechanism for every path, exactly the
-reference's single loaded PK index, internal/pk/mvcc.go:125 consulted
-by search.go:1092-1105 and engine.go:1617-1632), NOT by re-aggregating
-this family's marker rows.
+kill set (table._vis_vmax — read on the driver and applied as one
+in-plan predicate, the same structure the vector read path consults;
+one visibility mechanism for every path, exactly the reference's single
+loaded PK index, internal/pk/mvcc.go:125 consulted by
+search.go:1092-1105 and engine.go:1617-1632), NOT by re-aggregating
+this family's marker rows. A cold churned query builds its visible rows
+once: the stats aggregate reads them with markers, the scoring pass
+without.
 """
 
 from __future__ import annotations
@@ -236,16 +239,39 @@ def refresh_lexical_index(tbl, max_dirs: int = 8) -> int:
 
 def _visible_rows(tbl, terms: list[str] | None, markers: bool,
                   include_pending: bool = False) -> DataFrame:
-    """Index rows for the CURRENT live snapshot — stored legs ∪ recompute
-    delta leg, then df()'s visibility algebra on the rows. With `terms`,
-    postings are filtered at the SCAN (row-group pruned); markers=True
-    additionally keeps the per-doc dl rows (term IS NULL).
+    """Index rows for the CURRENT live snapshot: _visible_legs filtered
+    to the postings of `terms` (None: every term) and, with
+    markers=True, the per-doc dl rows (term IS NULL)."""
+    return _term_rows(_visible_legs(tbl, terms, include_pending),
+                      terms, markers)
+
+
+def _term_rows(rows: DataFrame, terms: list[str] | None,
+               markers: bool) -> DataFrame:
+    """`rows` of _visible_legs restricted as _visible_rows describes.
+    Catalyst pushes the condition through the visibility filter and the
+    union into each leg, so postings are filtered at the SCAN (row-group
+    pruned) and a leg's marker branch drops out when markers=False."""
+    cond = None
+    if terms is not None:
+        cond = F.col("term").isin(list(terms))
+    if markers:
+        nullc = F.col("term").isNull()
+        cond = nullc if cond is None else (cond | nullc)
+    return rows.where(cond) if cond is not None else rows
+
+
+def _visible_legs(tbl, terms: list[str] | None,
+                  include_pending: bool = False) -> DataFrame:
+    """Postings and marker rows for the CURRENT live snapshot — stored
+    legs ∪ recompute delta leg (postings of `terms` only), then df()'s
+    visibility algebra on the rows.
 
     include_pending=True is the read-your-writes view (r12 verdict #2 —
     the reference serves staged rows immediately through memtable
     lexicalIndex.Add, engine.go:833-921): staged-but-uncommitted
     segments ride the recompute delta leg (they are real written
-    parquet, just unpublished) and the kill frame flips to the
+    parquet, just unpublished) and the kill set flips to the
     pending-inclusive view exactly as df(include_pending=True) does — so the at-rest search sees the same world as the plain path
     over the writer's snapshot. Other readers still see committed-only."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
@@ -258,34 +284,25 @@ def _visible_rows(tbl, terms: list[str] | None, markers: bool,
     current = {s.path for s in man.segments}
     live_indexed = sorted(set(info["segments"]) & current)
 
-    def pick(df):
-        cond = None
-        if terms is not None:
-            cond = F.col("term").isin(list(terms))
-        if markers:
-            nullc = F.col("term").isNull()
-            cond = nullc if cond is None else (cond | nullc)
-        return df.where(cond) if cond is not None else df
-
     legs = []
     if live_indexed:
         stored = tbl._read_parquet_cached(
             [os.path.join(tbl.path, p) for p in blob_paths(info)])
-        legs.append(pick(stored.where(F.col("_seg").isin(live_indexed))))
+        legs.append(stored.where(F.col("_seg").isin(live_indexed)))
     delta = [s for s in man.segments if s.path not in set(info["segments"])]
     if include_pending:
         delta = delta + list(tbl._pending)
     if delta:
-        legs.append(pick(_segment_rows(tbl, delta, info["text_col"], terms)))
+        legs.append(_segment_rows(tbl, delta, info["text_col"], terms))
     if not legs:
         return tbl.spark.createDataFrame(
             [], "id long, _lsn long, _seg string, term string, tf long, dl long")
     base = legs[0]
     for leg in legs[1:]:
         base = base.unionByName(leg)
-    # visibility from the table's per-snapshot kill frame (the loaded PK
-    # index every read path consults, table._visible / mvcc.go:125): the
-    # frame covers the FULL snapshot from sidecar and tombstone bytes, so
+    # visibility from the table's per-snapshot kill set (the loaded PK
+    # index every read path consults, table._visible / mvcc.go:125): it
+    # covers the FULL snapshot from sidecar and tombstone bytes, so
     # a term-filtered subset never elects a stale version whose postings
     # happen to match, and every row of the live version survives (an
     # id's postings and marker share one _lsn)
@@ -295,7 +312,7 @@ def _visible_rows(tbl, terms: list[str] | None, markers: bool,
 # per-snapshot corpus statistics memo: (n_docs, total_len, docFreq map
 # or None). The reference holds N/Σdl and docFreq as RUNNING counters
 # read per query (bm25.go:29-53). A churned snapshot derives N/Σdl from
-# the marker rows + the visibility join (keyed by _counts_key, no map);
+# the marker rows + visibility (keyed by _counts_key, no map);
 # a clean one takes them from the manifest counters and loads its df
 # sidecars once into an entry keyed by the snapshot alone (_df_key,
 # _resident_df). Either way the result is immutable per snapshot, so
@@ -349,20 +366,22 @@ def _clean(tbl, include_pending: bool) -> bool:
             and all(s.path in indexed for s in man.segments))
 
 
-def _churn_stats(tbl, terms: list[str],
-                 include_pending: bool) -> tuple[int, int, dict[str, int]]:
+def _churn_stats(tbl, terms: list[str], include_pending: bool,
+                 rows: DataFrame | None = None) -> tuple[int, int, dict[str, int]]:
     """(n_docs, total_len, {term: df}) of a churned snapshot from ONE
     aggregate over its visible marker rows and query-term postings (one
-    posting row per (doc version, term), and the visibility join leaves
-    one version per id), parsed from one SQL string. Memoizes
-    (n_docs, total_len) per snapshot."""
+    posting row per (doc version, term), and visibility leaves one
+    version per id), parsed from one SQL string. `rows` is that
+    _term_rows(markers=True) frame when the caller already built it.
+    Memoizes (n_docs, total_len) per snapshot."""
     aggs = ["count(CASE WHEN term IS NULL THEN 1 END) AS n",
             "sum(CASE WHEN term IS NULL THEN dl END) AS total",
             *[f"count(CASE WHEN term = {_sql_str(t)} THEN 1 END) AS df_{i}"
               for i, t in enumerate(terms)]]
-    row = (_visible_rows(tbl, terms=terms, markers=True,
-                         include_pending=include_pending)
-           .agg(F.expr(f"struct({', '.join(aggs)}) AS s"))
+    if rows is None:
+        rows = _visible_rows(tbl, terms=terms, markers=True,
+                             include_pending=include_pending)
+    row = (rows.agg(F.expr(f"struct({', '.join(aggs)}) AS s"))
            .first()["s"])
     n, total = int(row["n"]), int(row["total"] or 0)
     _memo_counts(_counts_key(tbl, include_pending), (n, total, None))
@@ -374,7 +393,7 @@ def corpus_counts(tbl, include_pending: bool = False) -> tuple[int, int]:
     tombstones, no upserts, everything indexed, no staged rows in view)
     → summed from the manifest counters with ZERO jobs (the reference's
     running counters / count()'s O(#segments) stance); otherwise one
-    narrow marker aggregate through the visibility join — per-doc dl
+    narrow marker aggregate through visibility — per-doc dl
     genuinely needs it — run ONCE per snapshot state (memoized, and
     filled by the first churn-path query's _churn_stats)."""
     info = tbl.manifest.meta.get(FAMILY)
@@ -613,9 +632,13 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
             _snapshot_id(tbl.manifest), tuple(terms),
             include_pending, len(tbl._pending), len(tbl._pending_tombs))
     hit = _cached_candidate(tbl.path, ckey)
-    dfmap = None
+    dfmap = legs = None
     if hit is None and not _clean(tbl, include_pending):
-        n_docs, total_len, dfmap = _churn_stats(tbl, terms, include_pending)
+        # one build of the visible legs serves the stats aggregate (with
+        # marker rows) and the scoring pass (without)
+        legs = _visible_legs(tbl, terms, include_pending)
+        n_docs, total_len, dfmap = _churn_stats(
+            tbl, terms, include_pending, _term_rows(legs, terms, True))
     else:
         n_docs, total_len = corpus_counts(tbl, include_pending=include_pending)
     avg_dl = float(total_len) / float(n_docs) if n_docs else 0.0
@@ -638,8 +661,9 @@ def bm25_search_at_rest(tbl, query_text: str, k: int = 10,
             dfmap = _churn_stats(tbl, terms, include_pending)[2]
         resident = sum(dfmap.values()) <= _RESIDENT_MAX_CANDIDATES
         # the scoring pass reads postings only — no marker rows
-        rows = _visible_rows(tbl, terms=terms, markers=False,
-                             include_pending=include_pending)
+        rows = (_term_rows(legs, terms, False) if legs is not None
+                else _visible_rows(tbl, terms=terms, markers=False,
+                                   include_pending=include_pending))
         if resident:
             rows = rows.coalesce(1)
         tfs = ", ".join(

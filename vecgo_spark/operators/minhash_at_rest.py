@@ -22,8 +22,8 @@ operators/graph_at_rest.py):
             dir (existing dirs are immutable); meta grows paths/segments.
   read:     stored rows of still-live indexed segments ∪ a recompute
             delta leg for unindexed segments, then the SAME visibility
-            join VectorTable.df() runs (table._visible: one join on the
-            per-snapshot kill frame of tombstones and newer versions) —
+            VectorTable.df() runs (table._visible: the per-snapshot kill
+            set of tombstones and newer versions as one predicate) —
             so the result is bit-identical to minhash_signatures(tbl.df()).
   vacuum /  dirs are referenced via meta["minhash"] paths (collected once
   compact:  unreferenced); FULL compaction rewrites every segment, which
@@ -33,8 +33,7 @@ operators/graph_at_rest.py):
 
 Scale posture: the artifact is H+3 fixed-width columns per doc; the read
 path is id-arithmetic only (no text touched for indexed segments), and
-visibility is the same size-gated broadcast join on the cached kill frame
-that df() uses.
+visibility is the same cached per-snapshot kill set that df() uses.
 """
 
 from __future__ import annotations
@@ -141,10 +140,10 @@ def stored_minhash_signatures(tbl, include_pending: bool = False) -> DataFrame:
     """(id, m0..m{H-1}) for the CURRENT live snapshot, served from stored
     signatures wherever a live segment is indexed; bit-identical to
     minhash_signatures(tbl.df(), ...) by construction (determinism +
-    df()'s own visibility join applied to the signature rows).
+    df()'s own visibility applied to the signature rows).
     include_pending=True is the writer's read-your-writes view (r12
     verdict #2): staged segments ride the recompute delta leg and the
-    kill frame flips to the pending-inclusive view — parity target
+    kill set flips to the pending-inclusive view — parity target
     becomes minhash_signatures(tbl.df(include_pending=True), ...)."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
 

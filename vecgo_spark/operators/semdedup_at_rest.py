@@ -488,13 +488,13 @@ def _publish_repair_only(tbl, info, model, repair, max_dirs, write_dir,
 def _visible_assigned(tbl, include_pending: bool = False) -> DataFrame:
     """Assigned rows of the CURRENT live snapshot — stored legs ∪ a
     recompute delta leg for unindexed segments (flagged `_delta`), then
-    the SAME visibility join df() runs (table._visible: one join on the
-    table's cached per-snapshot kill frame).
+    the SAME visibility df() runs (table._visible: the table's cached
+    per-snapshot kill set).
 
     include_pending=True is the writer's read-your-writes view (the
     lexical_at_rest._visible_rows recipe, r12 verdict #2): staged
     segments ride the recompute delta leg (real written parquet, just
-    unpublished) and the kill frame flips to the pending-inclusive view
+    unpublished) and the kill set flips to the pending-inclusive view
     exactly as df(include_pending=True) does."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
 

@@ -14,8 +14,8 @@ Shape (shared with the minhash/graph/lexical families):
   refresh:  new segments get their own immutable dir; fold at the
             max_dirs cap (graph_at_rest.refresh_family_dirs core).
   read:     stored rows of live indexed segments ∪ a recompute delta leg
-            for unindexed segments, then df()'s visibility join (one
-            join on the per-snapshot kill frame, table._visible) —
+            for unindexed segments, then df()'s visibility (the
+            per-snapshot kill set, table._visible) —
             bit-identical to dedup.simhash(tbl.df()) by determinism.
   compact:  full compaction rebuilds the family (table.compact reindex);
   vacuum:   dirs referenced via meta["simhash"] paths.
@@ -120,7 +120,7 @@ def stored_simhash_signatures(tbl) -> DataFrame:
     """(id, simhash) for the CURRENT live snapshot, served from stored
     signatures wherever a live segment is indexed; bit-identical to
     dedup.simhash(tbl.df(), ...) by construction (determinism + df()'s
-    visibility join applied to the signature rows)."""
+    visibility applied to the signature rows)."""
     from vecgo_spark.operators.graph_at_rest import blob_paths
 
     info = tbl.manifest.meta.get(FAMILY)

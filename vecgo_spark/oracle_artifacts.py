@@ -51,8 +51,8 @@ def training_sample(
     id_col: str = "vec_id",
     max_rows: int = 20_000,
 ) -> np.ndarray:
-    """First max_rows vectors ORDER BY id, float64 — the oracle-side twin
-    of pq._sample_vectors(df, col, n, order_col=id)."""
+    """First max_rows non-NULL vectors ORDER BY id, float64 — the
+    oracle-side twin of pq._sample_vectors(df, col, n, order_col=id)."""
     key = (sf_dir, table, vector_col, max_rows)
     if key not in _SAMPLE_CACHE:
         import pyarrow.parquet as papq
@@ -60,7 +60,8 @@ def training_sample(
         t = papq.read_table(
             os.path.join(sf_dir, f"{table}.parquet"), columns=[id_col, vector_col]
         ).sort_by(id_col)
-        vecs = t.column(vector_col).to_pylist()[:max_rows]
+        vecs = [v for v in t.column(vector_col).to_pylist()
+                if v is not None][:max_rows]
         _SAMPLE_CACHE[key] = np.array(vecs, dtype=np.float64)
     return _SAMPLE_CACHE[key]
 

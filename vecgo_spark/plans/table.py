@@ -8,12 +8,12 @@ Reference lifecycle mapping (SURVEY §2.1, §3.3):
                      data staged as parquet, unreferenced until commit
   commit()           Commit: stats collection + atomic manifest publish
                      (engine.go:1700-1974); nothing durable before this
-  delete(ids)        tombstone file; hidden at read by the kill frame
+  delete(ids)        tombstone file; hidden at read by the kill set
                      (engine.go:1186-1302, tombstone.go)
   upsert             same-id re-insert wins by LSN; hidden at read by
-                     the kill frame (engine.go:993-1005)
-  scan/df()          snapshot read: manifest files → one join on the
-                     per-snapshot kill frame (engine.go:1378-1481)
+                     the kill set (engine.go:993-1005)
+  scan/df()          snapshot read: manifest files → the per-snapshot
+                     kill set as one predicate (engine.go:1378-1481)
   get(id)            point lookup: top-1 by LSN over the id-filtered
                      segment ∪ tombstone scans
   open(version=…)    time travel WithVersion/WithTimestamp (vecgo.go:422-448)
@@ -24,9 +24,11 @@ Reference lifecycle mapping (SURVEY §2.1, §3.3):
 
 Scale posture: the driver-side state is O(#segments) manifest JSON; reads
 are parquet scans with manifest-stats file pruning (plans/pruning.py) on
-top of Catalyst's row-group pruning; visibility is one join on a
-per-snapshot (id, _kill_lsn) frame, built once from the PK sidecars and
-tombstones and only when the snapshot has either.
+top of Catalyst's row-group pruning; visibility is the snapshot's kill
+set, read once on the driver from the PK sidecars and tombstones (only
+when the snapshot has either) and applied as one in-plan predicate — or,
+past VIS_PREDICATE_MAX_IDS, one join on a per-snapshot (id, _kill_lsn)
+frame.
 """
 
 from __future__ import annotations
@@ -79,31 +81,87 @@ BINNORM_COL = "_b_norm"  # at-rest L2 norm for the RaBitQ estimator (DOUBLE)
 # per-id max-LSN side (two longs/row → ~16 MB at the bound); beyond it
 # the join stays unhinted so it degrades to a shuffle join at scale
 TOMB_BROADCAST_MAX_IDS = 1_000_000
+# max ids of a snapshot's effective kill set that visibility applies as
+# one in-plan `CASE WHEN id IN (…)` predicate (VectorTable._visible).
+# Catalyst analyses and optimises the IN-list on every query, about
+# 25-45 ms per 1k ids on local[2]; past this bound the persisted
+# kill-frame join is cheaper for warm reads and serves instead (the probe
+# behind the value is in CHANGES.md)
+VIS_PREDICATE_MAX_IDS = 2_000
 # partial compaction folds surviving tombstone files into one per-id
 # max-LSN file once more than this many remain (tombstone migration)
 TOMB_FOLD_MAX_FILES = 8
 FAMILY_LEXICAL = "lexical"
 # loaded PK-index registry: (path, version, pending-state, snapshot,
-# tombstone set) → (persisted per-id kill frame, sidecar files it reads,
-# uncovered fallback segment paths) — see VectorTable._vis_vmax. Size of
-# one entry is O(distinct ids) — the reference's in-memory PK index has
-# the same footprint (pk/mvcc.go paged array); the cap bounds a session
-# serving many churned snapshots. The recorded sources let tests pin
-# that the version leg reads ONLY `_pk/` bytes (a persisted frame hides
-# its scan behind InMemoryRelation, so inputFiles() can't).
-_VIS_CACHE: dict[tuple, tuple[DataFrame, list[str], list[str]]] = {}
+# tombstone set) → (the kill set as ((kill LSN, "id, id, …"), …) groups,
+# or past VIS_PREDICATE_MAX_IDS the persisted per-id kill frame; sidecar
+# files it reads; uncovered fallback segment paths) — see
+# VectorTable._vis_vmax. Size of one entry is O(distinct ids) — the
+# reference's in-memory PK index has the same footprint (pk/mvcc.go
+# paged array); the cap bounds a session serving many churned snapshots.
+# The recorded sources let tests pin that the version leg reads ONLY
+# `_pk/` bytes.
+_VIS_CACHE: dict[tuple, tuple[DataFrame | tuple, list[str], list[str]]] = {}
 VIS_CACHE_CAP = 4
 
 
+def _drop_vis(key) -> None:
+    vis = _VIS_CACHE.pop(key)[0]
+    if isinstance(vis, DataFrame):
+        vis.unpersist()
+
+
+def _memo_vis(key: tuple, entry: tuple) -> None:
+    while len(_VIS_CACHE) >= VIS_CACHE_CAP:
+        _drop_vis(next(iter(_VIS_CACHE)))
+    _VIS_CACHE[key] = entry
+
+
 def release_vis_caches(table_path: str | None = None) -> None:
-    """Unpersist cached winning-LSN frames (long-lived sessions under
-    memory pressure; snapshots changed by another writer). With
-    table_path, only that table's frames are released — the per-table
-    scoping stance of lexical_at_rest.release_caches."""
-    keys = [k for k in _VIS_CACHE
-            if table_path is None or k[0] == table_path]
-    for k in keys:
-        _VIS_CACHE.pop(k)[0].unpersist()
+    """Release cached kill sets and unpersist kill frames (long-lived
+    sessions under memory pressure; snapshots changed by another
+    writer). With table_path, only that table's entries are released —
+    the per-table scoping stance of lexical_at_rest.release_caches."""
+    for k in [k for k in _VIS_CACHE
+              if table_path is None or k[0] == table_path]:
+        _drop_vis(k)
+
+
+def _read_id_lsn(path: str, id_col: str):
+    """(id, _lsn) int64 numpy arrays of one parquet dir, read with
+    pyarrow (no Spark job). NULL ids are dropped in Arrow first: a
+    nullable int64 column turns into float64 in to_numpy, which corrupts
+    ids above 2^53 — and a NULL id never matches a kill anyway."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from vecgo_spark.plans.manifest import _fs_for
+
+    fs, p = _fs_for(path)
+    t = pq.read_table(p, columns=[id_col, "_lsn"], filesystem=fs)
+    t = t.filter(pc.is_valid(t[id_col]))
+    return (t[id_col].to_numpy().astype(np.int64),
+            t["_lsn"].to_numpy().astype(np.int64))
+
+
+def _kill_groups(ids, kills) -> tuple:
+    """((kill LSN, "id, id, …"), …): ids grouped by their kill LSN,
+    ascending — the form _kill_predicate renders."""
+    import numpy as np
+
+    return tuple((int(k), ", ".join(map(str, np.sort(ids[kills == k]))))
+                 for k in np.unique(kills))
+
+
+def _kill_predicate(groups: tuple, id_col: str) -> str:
+    """One SQL predicate keeping a row version iff its id has no kill or
+    `_lsn > kill LSN`. A NULL id matches no IN-list and takes the ELSE,
+    as it matches no kill-frame row in the join."""
+    whens = " ".join(f"WHEN `{id_col}` IN ({ids}) THEN _lsn > {k}"
+                     for k, ids in groups)
+    return f"CASE {whens} ELSE TRUE END"
+
 
 # Declared metadata-schema field types (metadata/schema.go:7-17). "any"
 # accepts everything; undeclared fields always pass through (schema.go:46-49).
@@ -787,8 +845,9 @@ class VectorTable:
 
     def tomb_broadcastable(self, include_pending: bool = False) -> bool:
         """SIZE GATE for broadcasting the per-id tombstone side of a join
-        (maybe_compact's merge; the kill frame adds its version rows to
-        the same bound, see _visible).
+        (maybe_compact's merge past VIS_PREDICATE_MAX_IDS tombstoned
+        ids; the kill frame adds its version rows to the same bound, see
+        _visible).
 
         The per-id max-LSN side is bounded by the manifest's exact
         tombstone id counts — known without a Spark job. Broadcast only
@@ -810,8 +869,8 @@ class VectorTable:
     ) -> DataFrame:
         """The live snapshot as a DataFrame: manifest file list (pruned by
         stats when a FilterSet is given; optionally restricted to an
-        explicit segment subset) → one join on the snapshot's kill frame
-        (tombstones and newer versions, _visible) when either exists.
+        explicit segment subset) → the snapshot's kill set (tombstones
+        and newer versions, _visible) when either exists.
 
         include_pending=True is the read-your-writes view: committed
         segments ∪ staged-but-uncommitted segments and tombstones — the
@@ -831,9 +890,10 @@ class VectorTable:
         if upserts or self._tomb_files(include_pending):
             # predicates on the ID COLUMN restrict the visibility
             # universe soundly (any id they exclude is excluded from the
-            # final result by the same predicate below) — they push into
-            # the kill frame's scans so a point read on a 100 TB churned
-            # table row-group-prunes instead of aggregating every id
+            # final result by the same predicate below) — past the
+            # in-plan kill-set bound they push into the kill frame's
+            # scans, so a point read on a 100 TB churned table
+            # row-group-prunes instead of aggregating every id
             id_cond = None
             if isinstance(filter, FilterSet):
                 id_filters = [f for f in filter.filters
@@ -844,7 +904,7 @@ class VectorTable:
                                  id_cond=id_cond)
             if upserts and self.manifest.meta.get("has_dup_ids", True):
                 # same-LSN duplicates (NULL ids survive the insert-time
-                # collapse) tie on the kill frame — collapse to one row.
+                # collapse) tie on the kill set — collapse to one row.
                 # Skipped when every insert proved unique batch ids
                 # ((id, lsn) is then globally unique, so the kill join
                 # already leaves one row per id); pre-flag manifests
@@ -874,107 +934,108 @@ class VectorTable:
                  id_cond=None) -> DataFrame:
         """`rows` (one per stored row version, carrying the id as
         `id_col` and its `_lsn`) restricted to the versions live in this
-        snapshot: ONE left join on the kill frame (_vis_vmax), keeping a
-        row iff its id has no entry or `_lsn > _kill_lsn`. Every serving
-        path — df(), the lexical, minhash, simhash and semdedup
-        artifacts — applies visibility here, the reference's one loaded
-        PK index consulted per read (internal/pk/mvcc.go:125,
-        search.go:1092-1105).
+        snapshot: a row is kept iff its id has no kill or `_lsn >` its
+        kill LSN (_vis_vmax). Every serving path — df(), the lexical,
+        minhash, simhash and semdedup artifacts — applies visibility
+        here, the reference's one loaded PK index consulted per read
+        (internal/pk/mvcc.go:125, search.go:1092-1105).
 
-        The frame covers the FULL snapshot (committed segments, staged
-        ones with include_pending, plus `extra` explicit segments outside
-        the manifest), never a subset — a subset-local resolve would
-        elect a stale version whose winner lives in a dropped segment.
-        The broadcast is size-gated: the frame has at most one row per
-        version row (upserts) plus one per tombstoned id, both known from
-        the manifest without a job; past TOMB_BROADCAST_MAX_IDS the join
-        stays unhinted and degrades to a shuffle join at scale."""
+        Within the bounds the kill set is ONE parsed predicate in the
+        plan (_kill_predicate): no join, shuffle, persist or broadcast,
+        so a read after a commit runs its own job only. Past them it is
+        ONE left join on the kill frame. The kill set covers the FULL
+        snapshot (committed segments, staged ones with include_pending,
+        plus `extra` explicit segments outside the manifest), never a
+        subset — a subset-local resolve would elect a stale version
+        whose winner lives in a dropped segment. The frame's broadcast is
+        size-gated: it has at most one row per version row (upserts)
+        plus one per tombstoned id, both known from the manifest without
+        a job; past TOMB_BROADCAST_MAX_IDS the join stays unhinted and
+        degrades to a shuffle join at scale."""
         full = list(self.manifest.segments)
         if include_pending:
             full += self._pending
         known = {s.path for s in full}
         full += [s for s in extra if s.path not in known]
-        frame = self._vis_vmax(full, include_pending, id_cond)
-        if frame is None:
-            return rows
+        vis = self._vis_vmax(full, include_pending, id_cond)
         id_col = id_col or self.id_col
+        if not isinstance(vis, DataFrame):  # a kill set, maybe empty
+            return rows.where(_kill_predicate(vis, id_col)) if vis else rows
         if id_col != self.id_col:
-            frame = frame.withColumnRenamed(self.id_col, id_col)
+            vis = vis.withColumnRenamed(self.id_col, id_col)
         tomb_ids = self._tomb_ids(include_pending)
         versions = (sum(s.rows for s in full)
                     if self.manifest.meta.get("has_upserts") else 0)
         if tomb_ids is not None and versions + tomb_ids <= TOMB_BROADCAST_MAX_IDS:
-            frame = F.broadcast(frame)
-        return (rows.join(frame, id_col, "left")
+            vis = F.broadcast(vis)
+        return (rows.join(vis, id_col, "left")
                 .where(F.col("_kill_lsn").isNull()
                        | (F.col("_lsn") > F.col("_kill_lsn")))
                 .select(*rows.columns))
 
     def _vis_vmax(self, full: list[SegmentMeta], include_pending: bool,
-                  id_cond=None) -> DataFrame | None:
-        """The snapshot's kill frame — the loaded PK index: (id,
-        _kill_lsn) with _kill_lsn = max(max tombstone LSN, max version
-        LSN − 1) per id, so a row version is live iff `_lsn > _kill_lsn`.
-        A tombstone at LSN T kills versions with LSN <= T (a re-insert
-        after it is visible again — MVCC delete semantics,
-        internal/pk/mvcc.go:258, tombstone.go:47-77), and a newer version
-        kills every older one. The `− 1` form stays exact when a partial
-        merge left two versions of one id in one segment. Without upserts
-        the frame is the tombstone max alone; version rows come from the
-        persisted PK sidecars (pre-sidecar segments fall back to the
-        narrow (id, _lsn) projection of their own files), so the frame
-        never touches non-key segment bytes.
+                  id_cond=None) -> tuple | DataFrame | None:
+        """The snapshot's kill set — the loaded PK index: per id, kill
+        LSN = max(max tombstone LSN, max version LSN − 1), so a row
+        version is live iff `_lsn > kill LSN`. A tombstone at LSN T
+        kills versions with LSN <= T (a re-insert after it is visible
+        again — MVCC delete semantics, internal/pk/mvcc.go:258,
+        tombstone.go:47-77), and a newer version kills every older one.
+        The `− 1` form stays exact when a partial merge left two
+        versions of one id in one segment. Without upserts the kill set
+        is the tombstone max alone; version rows come from the persisted
+        PK sidecars (pre-sidecar segments fall back to the narrow
+        (id, _lsn) projection of their own files), so it never touches
+        non-key segment bytes. None when the snapshot has neither.
 
-        The frame is IMMUTABLE per (manifest version, pending state,
-        segment set, tombstone set), so it is persisted once and reused
-        by every read of the serving session (the reference loads its PK
-        index once, mvcc.go:125) — repeat reads pay an InMemoryTableScan.
-        Registry is module-level (serving code reopens tables per query),
-        keyed by table path + snapshot identity, capped with oldest-first
-        unpersist; release_vis_caches() frees it explicitly."""
+        When the manifest bounds the version rows plus tombstoned ids by
+        TOMB_BROADCAST_MAX_IDS, the set is read on the driver with
+        pyarrow — no Spark job (_kill_set) — and returned as
+        ((kill LSN, ids), …) groups for _kill_predicate. Past that, or
+        when its effective ids exceed VIS_PREDICATE_MAX_IDS, it is the
+        (id, _kill_lsn) frame aggregated by Spark from the same files.
+
+        Either form is IMMUTABLE per (manifest version, pending state,
+        segment set, tombstone set), so it is built once and reused by
+        every read of the serving session (the reference loads its PK
+        index once, mvcc.go:125); a frame is persisted, so repeat reads
+        pay an InMemoryTableScan. Registry is module-level (serving code
+        reopens tables per query), keyed by table path + snapshot
+        identity, capped with oldest-first release;
+        release_vis_caches() frees it explicitly."""
         upserts = self.manifest.meta.get("has_upserts")
         covered = [s for s in full if s.pk and s.rows] if upserts else []
         uncovered = [s for s in full if not s.pk and s.rows] if upserts else []
-        tomb = self._tombstones(include_pending)
-        if not covered and not uncovered and tomb is None:
+        tombs = self._tomb_files(include_pending)
+        if not covered and not uncovered and not tombs:
             return None
         key = (self.path, self.manifest.version, include_pending,
                len(self._pending), tuple(sorted(s.path for s in full)),
-               tuple(self._tomb_files(include_pending)))
+               tuple(tombs))
         hit = _VIS_CACHE.get(key)
-        if id_cond is None:
+        # An id-restricted read (point-read shape) counts and consults
+        # the registry only when the snapshot is within the broadcast
+        # gate; past it the row-group-pruned id-restricted frame below
+        # stays the scale path — a point read must never shuffle a
+        # corpus-sized frame — and counts neither hit nor miss
+        # (symmetric — cache_stats.py docstring).
+        if id_cond is None or sum(s.rows for s in full) <= TOMB_BROADCAST_MAX_IDS:
             cache_stats.record("pk_index", hit is not None, scope=self.path)
             if hit is not None:
                 # LRU, not FIFO: refresh recency so >cap hot snapshots
-                # don't thrash persist/unpersist every query (r11 review)
+                # don't thrash every query
                 _VIS_CACHE[key] = _VIS_CACHE.pop(key)
                 return hit[0]
-        else:
-            # id-restricted read (point-read shape): when the
-            # predicate-free frame is ALREADY loaded for this snapshot
-            # AND broadcast-sized, consult it — repeated point reads on a
-            # served churned table ran ~2x faster from the loaded frame
-            # than rebuilding the id-restricted scan per call (measured
-            # at sf0.1, r12). Past the broadcast gate the row-group-
-            # pruned id-restricted scan below stays the scale path — a
-            # point read must never shuffle a corpus-sized frame. A COLD
-            # point read also keeps the scan: building the O(distinct
-            # ids) frame for a one-off would be a loss. Counting stance
-            # (r12 ADVICE): a point read counts exactly when the cache is
-            # APPLICABLE (broadcast-sized snapshot) — hit when the frame
-            # is loaded, miss when it falls through to the scan;
-            # over-gate point reads bypass by design and count neither
-            # (symmetric — cache_stats.py docstring).
-            if sum(s.rows for s in full) <= TOMB_BROADCAST_MAX_IDS:
-                cache_stats.record("pk_index", hit is not None,
-                                   scope=self.path)
-                if hit is not None:
-                    _VIS_CACHE[key] = _VIS_CACHE.pop(key)
-                    return hit[0]
-        legs, pk_files = [], []
+        pk_files = sorted({os.path.join(self.path, s.pk) for s in covered})
+        tomb_ids = self._tomb_ids(include_pending)
+        versions = sum(s.rows for s in full) if upserts else 0
+        if tomb_ids is not None and versions + tomb_ids <= TOMB_BROADCAST_MAX_IDS:
+            groups, scanned = self._kill_set(covered, uncovered, tombs)
+            if groups is not None:
+                _memo_vis(key, (groups, pk_files, scanned))
+                return groups
+        legs = []
         if covered:
-            pk_files = sorted({os.path.join(self.path, s.pk)
-                               for s in covered})
             # a sidecar's id column has its segment's id type
             id_types = {None if (seg := self._recorded_schema([s])) is None
                         else seg[self.id_col].dataType.simpleString()
@@ -987,23 +1048,66 @@ class VectorTable:
             legs.append(self._segment_df(uncovered))
         legs = [leg.select(self.id_col, (F.col("_lsn") - 1).alias("_lsn"))
                 for leg in legs]
+        tomb = self._tombstones(include_pending)
         if tomb is not None:
             legs.append(tomb)
         vis = legs[0]
         for leg in legs[1:]:
             vis = vis.unionByName(leg)
         if id_cond is not None:
-            # id-restricted one-off: the predicate pushes through the
-            # union into each scan's PushedFilters (row-group pruning)
-            vis = vis.where(id_cond)
-        frame = vis.groupBy(self.id_col).agg(F.max("_lsn").alias("_kill_lsn"))
-        if id_cond is not None:
-            return frame
-        frame = frame.persist()
-        while len(_VIS_CACHE) >= VIS_CACHE_CAP:
-            _VIS_CACHE.pop(next(iter(_VIS_CACHE)))[0].unpersist()
-        _VIS_CACHE[key] = (frame, pk_files, [s.path for s in uncovered])
+            # id-restricted one-off past the kill-set bound: the
+            # predicate pushes through the union into each scan's
+            # PushedFilters (row-group pruning); building the
+            # O(distinct ids) frame for a one-off would be a loss
+            return (vis.where(id_cond)
+                    .groupBy(self.id_col).agg(F.max("_lsn").alias("_kill_lsn")))
+        frame = (vis.groupBy(self.id_col).agg(F.max("_lsn").alias("_kill_lsn"))
+                 .persist())
+        _memo_vis(key, (frame, pk_files, [s.path for s in uncovered]))
         return frame
+
+    def _kill_set(self, covered: list[SegmentMeta],
+                  uncovered: list[SegmentMeta], tombs: list[str]):
+        """(groups, segment paths read) for the snapshot's EFFECTIVE kill
+        set read with pyarrow — the ids whose kill hides a stored row,
+        as _kill_groups — or (None, …) past VIS_PREDICATE_MAX_IDS. An id
+        whose kill hides nothing would only lengthen the IN-list.
+        Versions come from the PK sidecars (one row per id, its max
+        _lsn). A segment without one contributes its own (id, _lsn)
+        columns; so does one whose recorded id ndv is below its row
+        count, since it holds two versions of one id and the sidecar's
+        max would hide the older. Without upserts no row is read and
+        every tombstoned id is kept."""
+        import numpy as np
+
+        def read(paths):
+            parts = [_read_id_lsn(os.path.join(self.path, p), self.id_col)
+                     for p in paths] or [(np.empty(0, np.int64),) * 2]
+            return tuple(np.concatenate(c) for c in zip(*parts))
+
+        def multi(s):
+            st = (s.stats or {}).get(self.id_col) or {}
+            return s.rows > 1 and st.get("ndv") != s.rows
+
+        scanned = [s.path for s in uncovered + [s for s in covered if multi(s)]]
+        row_ids, row_lsns = read(
+            [s.pk for s in covered if not multi(s)] + scanned)
+        tomb_ids, tomb_lsns = read(tombs)
+        ids = np.concatenate([row_ids, tomb_ids])
+        kills = np.concatenate([row_lsns - 1, tomb_lsns])
+        if not len(ids):
+            return (), scanned
+        order = np.lexsort((kills, ids))
+        ids, kills = ids[order], kills[order]
+        last = np.append(ids[1:] != ids[:-1], True)
+        ids, kills = ids[last], kills[last]  # per-id max kill, by id
+        if covered or uncovered:
+            hides = row_lsns <= kills[np.searchsorted(ids, row_ids)]
+            eff = np.unique(row_ids[hides])
+            ids, kills = eff, kills[np.searchsorted(ids, eff)]
+        if len(ids) > VIS_PREDICATE_MAX_IDS:
+            return None, scanned
+        return _kill_groups(ids, kills), scanned
 
     def _empty_schema(self):
         from pyspark.sql.types import LongType, StructField, StructType
@@ -1700,8 +1804,11 @@ class VectorTable:
         version = self.manifest.version + 1
         live = self.df().withColumn("_lsn", F.lit(self.manifest.lsn).cast("long"))
         live = self._with_codes(live, sq_params, pq_books, bin_params)
+        # a NULL vector has no nearest list: it is kept in list 0, where
+        # it scores NULL and ranks last
         assigned = live.withColumn(
-            CLUSTER_COL, ivfmod.assign_expr(model, self.vector_col)
+            CLUSTER_COL, F.coalesce(ivfmod.assign_expr(model, self.vector_col),
+                                    F.lit(0))
         ).withColumn("_part", F.col(CLUSTER_COL))
         name = f"seg-{lsn:08d}-ivf-{uuid.uuid4().hex[:8]}"
         rel = os.path.join(SEG_DIR, name)
@@ -2168,9 +2275,18 @@ class VectorTable:
             return None
         picked = {s.path for s in task.segments}
         merged_src = self._segment_df(task.segments)
-        tomb = self._tombstones()
-        if tomb is not None:
-            tmax = tomb.groupBy(self.id_col).agg(F.max("_lsn").alias("_tomb_lsn"))
+        tombs = self.manifest.tombstone_files
+        n_tomb = self._tomb_ids()
+        if tombs and n_tomb is not None and n_tomb <= VIS_PREDICATE_MAX_IDS:
+            # the tombstones' kill set as one in-plan predicate, read
+            # with pyarrow: no aggregate, shuffle or broadcast job
+            groups = self._kill_set([], [], tombs)[0]
+            if groups:
+                merged_src = merged_src.where(
+                    _kill_predicate(groups, self.id_col))
+        elif tombs:
+            tmax = (self._tombstones().groupBy(self.id_col)
+                    .agg(F.max("_lsn").alias("_tomb_lsn")))
             if self.tomb_broadcastable():
                 tmax = F.broadcast(tmax)
             merged_src = (
@@ -2365,7 +2481,7 @@ class VectorTable:
             # entry stays (its sidecars are referenced ⇒ never GC'd).
             for k in [k for k in _VIS_CACHE
                       if k[0] == self.path and k[1] != self.manifest.version]:
-                _VIS_CACHE.pop(k)[0].unpersist()
+                _drop_vis(k)
             # same exposure for the lexical candidate frames (r12):
             # frames cached for superseded snapshots may reference
             # postings dirs just GC'd — evict stale-snapshot entries,

@@ -85,7 +85,9 @@ def _sample_vectors(
     deterministic ORDER BY id LIMIT n — the first max_rows rows by id, a
     TakeOrderedAndProject (no global sort) — so a trainer fed this sample
     is bit-reproducible across sessions AND matches an oracle-side reader
-    that sorts the same parquet by the same column."""
+    that sorts the same parquet by the same column. NULL vectors are
+    left out of both samples: they have no coordinates to train on."""
+    df = df.where(F.col(vector_col).isNotNull())
     if order_col is not None:
         rows = df.orderBy(order_col).select(vector_col).limit(max_rows).collect()
         return np.array([list(r[0]) for r in rows], dtype=np.float64)
